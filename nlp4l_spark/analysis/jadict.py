@@ -102,6 +102,13 @@ class JaUserDictEntry:
             raise ValueError(f"userdict line needs surface,segments: {line!r}")
         surface = parts[0]
         segments = tuple(parts[1].split())
+        if "'" in surface or "'" in parts[1]:
+            # surfaces and segments become SQL string literals in the
+            # DuckDB Viterbi twin (JaViterbiAnalyzer.viterbi_sql)
+            raise ValueError(
+                "userdict surface/segments must not contain a single "
+                f"quote: {line!r}"
+            )
         readings = tuple(parts[2].split()) if len(parts) > 2 and parts[2] else ()
         cost = int(parts[4]) if len(parts) > 4 and parts[4] else None
         return JaUserDictEntry(surface, segments, readings, cost)

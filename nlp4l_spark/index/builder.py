@@ -60,9 +60,7 @@ from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.index.docids import assign_doc_ids
-
-K1 = 1.2
-B = 0.75
+from nlp4l_spark.search.wand import bm25_impact
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -714,7 +712,7 @@ def _segment_merger(avgdl: float):
             ([0], 1 + np.flatnonzero(np.diff(run_of_val) != 0))
         )
         vends = np.concatenate((vstarts[1:], [d.size]))
-        impact = f * (K1 + 1.0) / (f + K1 * (1.0 - B + B * l / (avgdl or 1.0)))
+        impact = bm25_impact(f, l, avgdl)
         # bulk re-encode with per-run gap resets
         gaps = np.empty(d.size, dtype=np.uint64)
         gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)

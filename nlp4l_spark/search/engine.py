@@ -2,8 +2,11 @@
 
 Reference semantics: ISearcher.search(query, rows, sort) -> top-k ScoreDocs
 under default BM25(k1=1.2, b=0.75), OR over query terms, ties by docID asc
-(/root/reference/app/org/nlp4l/lucene/ISearcher.scala:31-49). Two physical
-strategies, both returning identical results (tested):
+(NLP4L app/org/nlp4l/lucene/ISearcher.scala:31-49). Every BM25
+score in this module is ``idf · wand.bm25_impact(tf, dl, avgdl)`` — the
+package's single BM25 definition, applied to Spark Columns and NumPy
+arrays alike. Three physical strategies (``method=``), all returning
+identical rows (tested):
 
 * ``dataframe`` — decode matching postings to (doc_id, tf, dl) rows and let
   Catalyst do the scoring: broadcast (term, idf) join, SQL BM25 expression,
@@ -14,6 +17,8 @@ strategies, both returning identical results (tested):
   score upper bound, emits its local top-k; a global top-k merge finishes.
   This is the 10^12-doc path: work is proportional to the query's posting
   shards, never to the corpus.
+* ``maxscore`` — the same task harness with block-max MaxScore
+  (wand.maxscore_topk) as the per-shard kernel.
 
 Query-side joins are all broadcast (queries are tiny); the postings scan is
 term-pruned via an ``isin`` filter that parquet row-group stats can skip on
@@ -23,21 +28,24 @@ term-pruned via an ``isin`` filter that parquet row-group stats can skip on
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search import wand as wand_mod
+# K1 and B are re-exported: wand.py holds the one BM25 definition
+from nlp4l_spark.search.wand import B, K1, bm25_impact  # noqa: F401
 
-K1 = 1.2
-B = 0.75
+_SCORED = "doc_id long, score double"
+_RANKED = "doc_id long, score double, rank int"
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -55,6 +63,97 @@ _TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType()),
     ]
 )
+
+
+def _bm25(weight: Column, avgdl: float) -> Column:
+    """weight · bm25_impact over the frame's (tf, dl) columns."""
+    return weight * bm25_impact(F.col("tf"), F.col("dl"), avgdl)
+
+
+def _with_bm25(joined: DataFrame, avgdl: float) -> DataFrame:
+    """Decoded postings joined to their term's ``idf`` weight, plus each
+    posting's BM25 contribution ``_s``."""
+    return joined.withColumn("_s", _bm25(F.col("idf"), avgdl))
+
+
+def _score_sum(n: int) -> Column:
+    """Aggregate: a group's ``_s`` contributions added in term order —
+    ``pos`` (< n) is a row's index among its query's sorted terms, and a
+    doc has at most one row per term — starting from 0.0: the order
+    wand_topk, maxscore_topk and explain() add in, so every path gives a
+    doc the same bits. A plain SUM adds 3+ terms in whatever order the
+    shuffle delivers rows."""
+    total = F.lit(0.0)
+    for i in range(n):
+        part = F.sum(F.when(F.col("pos") == i, F.col("_s")))
+        total = total + F.coalesce(part, F.lit(0.0))
+    return total
+
+
+def _sum_scores(scored: DataFrame, n: int, *by: str) -> DataFrame:
+    """Per-doc (or per ``by`` key) score: the term-order sum of ``_s``."""
+    return scored.groupBy(*(by or ("doc_id",))).agg(_score_sum(n).alias("score"))
+
+
+def _top(frame: DataFrame, k: int) -> DataFrame:
+    """The k best rows in (score DESC, doc_id ASC) order."""
+    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _ranked(frame: DataFrame) -> DataFrame:
+    """Add the 1-based ``rank`` column of the (score DESC, doc_id ASC)
+    order."""
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    return frame.withColumn("rank", F.row_number().over(w))
+
+
+def _first_k(docs: DataFrame, k: int, boost: float = 1.0) -> DataFrame:
+    """Constant-score retrieval: the k smallest doc ids at score=boost."""
+    return (
+        docs.orderBy(F.asc("doc_id"))
+        .limit(k)
+        .select("doc_id", F.lit(float(boost)).alias("score"))
+    )
+
+
+def _range_cond(lower, upper, include_lower: bool, include_upper: bool):
+    """Lexicographic term-range predicate; bounds are lowercased to match
+    the all-lowercase term dictionary, None = unbounded."""
+    t = F.col("term")
+    cond = F.lit(True)
+    if lower is not None:
+        lower = lower.lower()
+        cond = cond & (t >= lower if include_lower else t > lower)
+    if upper is not None:
+        upper = upper.lower()
+        cond = cond & (t <= upper if include_upper else t < upper)
+    return cond
+
+
+def _positions(tv: DataFrame, term: str, alias: str) -> DataFrame:
+    """(doc_id, positions AS alias) term_vectors rows of one term."""
+    return tv.filter(F.col("term") == term).select(
+        "doc_id", F.col("positions").alias(alias)
+    )
+
+
+def _near(win: int, in_order: bool):
+    """Span-near partner test for an anchor position p0 against ``_pb``:
+    ordered = b strictly after within ``win``, else either side."""
+    if in_order:
+        return lambda p0: F.exists(
+            F.col("_pb"), lambda p1: (p1 > p0) & (p1 - p0 <= win)
+        )
+    return lambda p0: F.exists(
+        F.col("_pb"), lambda p1: (p1 != p0) & (F.abs(p1 - p0) <= win)
+    )
+
+
+def _round6(x: float) -> float:
+    """Round half up to 6 dp — the rule of Spark's F.round and DuckDB's
+    round(x, 6) — on the value's shortest decimal repr; Python's round()
+    rounds the binary value half-to-even instead."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def damerau_levenshtein(a: str, b: str) -> int:
@@ -177,8 +276,10 @@ class Searcher:
         return df.join(tomb, col, "left_anti")
 
     # ------------------------------------------------------------------ #
-    def _term_stats(self, terms: list[str]) -> dict[str, int]:
-        """df per term — a point lookup on the sorted term dictionary."""
+    def _term_stats(self, terms: list[str], cf: bool = False) -> dict:
+        """df per present term — a point lookup on the sorted term
+        dictionary; with ``cf`` the values are (df, cf) pairs, for
+        similarities that need collection term frequency."""
         if not terms:
             return {}
         rows = (
@@ -186,6 +287,8 @@ class Searcher:
             .filter(F.col("term").isin(terms))
             .collect()
         )
+        if cf:
+            return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
         return {r["term"]: int(r["df"]) for r in rows}
 
     def _matching_postings(self, terms: list[str]) -> DataFrame:
@@ -193,18 +296,145 @@ class Searcher:
             F.col("term").isin(terms)
         )
 
-    def _term_stats_full(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """(df, cf) per term — same pushed-In(term) dictionary point lookup
-        as _term_stats, for similarities that need collection term
-        frequency (LM Dirichlet / Jelinek-Mercer)."""
-        if not terms:
-            return {}
-        rows = (
-            self.cat.read(self.spark, "term_stats")
-            .filter(F.col("term").isin(terms))
-            .collect()
+    # ---- shared scoring setup ----------------------------------------- #
+    def _empty(self, schema: str = _SCORED) -> DataFrame:
+        return self.spark.createDataFrame([], schema)
+
+    def _terms(self, query: str) -> list[str]:
+        """The query's distinct analyzed terms, sorted."""
+        return sorted(set(self.analyzer.tokenize(query)))
+
+    def _weights(
+        self,
+        terms: list[str],
+        boosts: dict[str, float] | None = None,
+        dfs: dict[str, int] | None = None,
+    ) -> list[tuple[str, float]]:
+        """(term, idf·boost) for every term present in the index."""
+        dfs = self._term_stats(terms) if dfs is None else dfs
+        boosts = boosts or {}
+        return [
+            (t, idf(self.num_docs, dfs[t]) * float(boosts.get(t, 1.0)))
+            for t in terms
+            if t in dfs
+        ]
+
+    def _joined(self, rows: list[tuple], weight: str = "idf"):
+        """Decoded postings of the (term, w) rows' terms broadcast-joined
+        to w as column ``weight`` and to the term's index in term order as
+        ``pos``: (term, doc_id, tf, dl, weight, pos). None when no term is
+        present."""
+        if not rows:
+            return None
+        qterms = F.broadcast(
+            self.spark.createDataFrame(
+                [(t, w, i) for i, (t, w) in enumerate(sorted(rows))],
+                f"term string, {weight} double, pos int",
+            )
         )
-        return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+        postings = self._matching_postings([r[0] for r in rows])
+        return self._decoded(postings).join(qterms, "term")
+
+    def _scored(self, rows: list[tuple[str, float]]) -> DataFrame | None:
+        """_joined (term, idf·boost) rows plus each posting's BM25
+        contribution ``_s``."""
+        j = self._joined(rows)
+        return None if j is None else _with_bm25(j, self.avgdl)
+
+    def _weighted_or_frame(self, rows: list[tuple]) -> DataFrame | None:
+        """(term, idf*boost) rows -> unlimited (doc_id, score) OR frame."""
+        scored = self._scored(rows)
+        return None if scored is None else _sum_scores(scored, len(rows))
+
+    def _sum_topk(
+        self, rows: list[tuple], weight: str, expr: Column, k: int
+    ) -> DataFrame:
+        """Top-k of per-doc sums of ``expr`` over the rows' postings (the
+        shared plan of the non-BM25 similarities)."""
+        j = self._joined(rows, weight)
+        if j is None:
+            return self._empty()
+        return _top(_sum_scores(j.withColumn("_s", expr), len(rows)), k)
+
+    def _docs(self, postings: DataFrame) -> DataFrame:
+        """Distinct live doc ids of a postings frame."""
+        return self._decoded(postings).select("doc_id").distinct()
+
+    def _present_docs(self, terms: list[str]) -> DataFrame | None:
+        """Distinct docs matching >= 1 of the terms; None when no term is
+        in the index."""
+        stats = self._term_stats(terms)
+        present = [t for t in terms if t in stats]
+        return self._docs(self._matching_postings(present)) if present else None
+
+    def _term_vectors(self, what: str) -> DataFrame:
+        """The opt-in term_vectors table, or a ValueError naming ``what``."""
+        if not self.cat.is_committed("term_vectors"):
+            raise ValueError(
+                f"{what} needs term_vectors "
+                "(IndexBuilder(store_term_vectors=True))"
+            )
+        return self.cat.read(self.spark, "term_vectors")
+
+    def _single_terms(self, what: str, *texts: str) -> list[str]:
+        """The one analyzed term of each text; ValueError when a text
+        analyzes to zero or several terms."""
+        out = []
+        for text in texts:
+            toks = self.analyzer.tokenize(text)
+            if len(toks) != 1:
+                raise ValueError(f"{what} must analyze to one term each")
+            out.append(toks[0])
+        return out
+
+    def _span_topk(
+        self, frame: DataFrame, name: str, count: Column, k: int
+    ) -> DataFrame:
+        """Constant-score span retrieval: live docs with count > 0 as
+        (doc_id, name), docID ascending."""
+        return (
+            self._not_deleted(frame)
+            .select("doc_id", count.cast("long").alias(name))
+            .filter(F.col(name) > 0)
+            .orderBy(F.asc("doc_id"))
+            .limit(k)
+        )
+
+    def _phrase_scores(self, cand: DataFrame, weight: float) -> DataFrame:
+        """(doc_id, tf) phrase-frequency rows -> (doc_id, score): dl joins
+        from doc_lens and score = weight · bm25_impact(tf, dl) — the
+        PhraseQuery recipe (weight = Σ idf of the phrase's terms)."""
+        dl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
+        return cand.join(dl, "doc_id").select(
+            "doc_id", _bm25(F.lit(weight), self.avgdl).alias("score")
+        )
+
+    def _exact_phrase_frame(
+        self, tv: DataFrame, terms: list[str], weight: float
+    ) -> DataFrame:
+        """Unlimited PhraseQuery frame from term_vectors ``tv``: tf =
+        positions p with term i at p + i for every i (n-way doc_id join
+        of the terms' position lists)."""
+        joined = None
+        for i, t in enumerate(terms):
+            side = _positions(tv, t, f"_p{i}")
+            joined = side if joined is None else joined.join(side, "doc_id")
+
+        # transform lambdas must be 1-arg: 2-arg means (element, index)
+        def _shift(off: int):
+            return lambda p: p - off
+
+        first = F.col("_p0")
+        for i in range(1, len(terms)):
+            first = F.array_intersect(
+                first, F.transform(F.col(f"_p{i}"), _shift(i))
+            )
+        cand = self._not_deleted(
+            joined.select("doc_id", F.size(first).alias("tf")).filter(
+                F.col("tf") > 0
+            )
+        )
+        return self._phrase_scores(cand, weight)
 
     def browse_terms(self, seek: str = "", n: int = 20) -> DataFrame:
         """Lucene TermsEnum.seekCeil + next() — the term-dictionary walk
@@ -270,13 +500,12 @@ class Searcher:
         is a pushed In(doc_id) point lookup on the doc-sorted table; all
         window arithmetic is HOFs over k docs' position arrays — corpus
         size never appears after the BM25 stage."""
-        qterms = sorted(set(self.analyzer.tokenize(query)))
+        qterms = self._terms(query)
         top = self.search(query, k=k, method="dataframe").collect()
         if not top:
-            return self.spark.createDataFrame(
-                [],
+            return self._empty(
                 "doc_id long, score double, start_pos long, "
-                "n_hits long, snippet string",
+                "n_hits long, snippet string"
             )
         ids = [int(r["doc_id"]) for r in top]
         scores = {int(r["doc_id"]): float(r["score"]) for r in top}
@@ -363,7 +592,7 @@ class Searcher:
         result (tested). Per-displayed-result driver-side op, like
         ``highlight``: one pushed-In(term) postings lookup, no corpus
         work."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         dfs = self._term_stats(terms)
         present = [t for t in terms if t in dfs]
         out = {"doc_id": int(doc_id), "score": 0.0, "details": []}
@@ -374,13 +603,10 @@ class Searcher:
             .filter(F.col("doc_id") == int(doc_id))
             .collect()
         )
-        avgdl = self.avgdl or 1.0
         for r in sorted(rows, key=lambda r: r["term"]):
             w = idf(self.num_docs, dfs[r["term"]])
             tf, dl = float(r["tf"]), float(r["dl"])
-            tf_norm = (
-                tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            )
+            tf_norm = bm25_impact(tf, dl, self.avgdl)
             s = w * tf_norm
             out["details"].append(
                 {
@@ -411,51 +637,9 @@ class Searcher:
         the same BM25 sum over matching terms either way (Lucene
         semantics: MUST only changes the candidate set)."""
         if operator == "and":
-            return self._search_conjunctive(query, k)
+            return _ranked(self.search_boolean(must=[query], k=k))
         res = self.search_batch([(0, query, k)], method=method)
         return res.select("doc_id", "score", "rank")
-
-    def _search_conjunctive(self, query: str, k: int) -> DataFrame:
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        if len(dfs) < len(terms) or not terms:
-            # a MUST term missing from the index -> no results
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings(terms))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        out = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(
-                F.sum("_s").alias("score"),
-                F.countDistinct("term").alias("_nm"),
-            )
-            .filter(F.col("_nm") == len(terms))  # the MUST candidate set
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.withColumn("rank", F.row_number().over(w))
 
     def search_block_join(
         self,
@@ -486,38 +670,15 @@ class Searcher:
         score_max desc / parent asc, limit k."""
         if (parent_col is None) == (parent_expr is None):
             raise ValueError("pass exactly one of parent_col / parent_expr")
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        present = [t for t in terms if t in dfs]
-        if not present:
-            return self.spark.createDataFrame(
-                [],
+        rows = self._weights(self._terms(query))
+        scored = self._scored(rows)
+        if scored is None:
+            return self._empty(
                 "parent long, score_max double, score_total double,"
-                " n_child long, best_child long",
+                " n_child long, best_child long"
             )
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in present]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings(present))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        child = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("_s"), 6).alias("s"))
+        child = scored.groupBy("doc_id").agg(
+            F.round(_score_sum(len(rows)), 6).alias("s")
         )
         if parent_col is not None:
             stored = self.cat.read(self.spark, "stored").select(
@@ -565,12 +726,7 @@ class Searcher:
         from nlp4l_spark.search.queryparser import parse
 
         frame = self._qnode_frame(parse(query), 1.0)
-        if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return (
-            frame.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._empty() if frame is None else _top(frame, k)
 
     def search_simple(self, query: str, k: int = 10) -> DataFrame:
         """ES simple_query_string / Lucene SimpleQueryParser surface:
@@ -587,79 +743,24 @@ class Searcher:
 
         node = parse_simple(query)
         frame = self._qnode_frame(node, 1.0) if node is not None else None
-        if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _weighted_or_frame(self, rows: list[tuple]) -> DataFrame | None:
-        """(term, idf*boost) rows -> unlimited (doc_id, score) OR frame."""
-        if not rows:
-            return None
-        qterms = F.broadcast(
-            self.spark.createDataFrame(
-                [(0, t, w) for t, w in rows], "qid int, term string, idf double"
-            )
-        )
-        postings = self._matching_postings([t for t, _ in rows])
-        return self._score_dataframe(postings, qterms).select(
-            "doc_id", "score"
-        )
+        return self._empty() if frame is None else _top(frame, k)
 
     def _const_frame(self, postings: DataFrame, boost: float) -> DataFrame:
         """Constant-score frame (multi-term rewrite): distinct matching
         docs at score = boost."""
-        return (
-            self._decoded(postings)
-            .select("doc_id")
-            .distinct()
-            .select("doc_id", F.lit(float(boost)).alias("score"))
+        return self._docs(postings).select(
+            "doc_id", F.lit(float(boost)).alias("score")
         )
 
     def _phrase_frame(self, terms: list[str], boost: float) -> DataFrame | None:
         """Unlimited PhraseQuery BM25 frame from term_vectors (the
         composable form of search_phrase's term_vectors path)."""
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "phrase clauses need term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
+        tv = self._term_vectors("phrase clauses")
         dfs = self._term_stats(terms)
         if any(t not in dfs for t in terms):
             return None
-        tv = self.cat.read(self.spark, "term_vectors")
-        joined = None
-        for i, t in enumerate(terms):
-            side = tv.filter(F.col("term") == t).select(
-                "doc_id", F.col("positions").alias(f"_p{i}")
-            )
-            joined = side if joined is None else joined.join(side, "doc_id")
-
-        def _shift(off: int):
-            return lambda p: p - off
-
-        first = F.col("_p0")
-        for i in range(1, len(terms)):
-            first = F.array_intersect(
-                first, F.transform(F.col(f"_p{i}"), _shift(i))
-            )
-        cand = self._not_deleted(
-            joined.select("doc_id", F.size(first).alias("tf")).filter(
-                F.col("tf") > 0
-            )
-        )
         idf_sum = sum(idf(self.num_docs, dfs[t]) for t in terms)
-        dl = self.cat.read(self.spark, "doc_lens")
-        score = (
-            F.lit(idf_sum * float(boost))
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(self.avgdl))
-            )
-        )
-        return cand.join(dl, "doc_id").select("doc_id", score.alias("score"))
+        return self._exact_phrase_frame(tv, terms, idf_sum * float(boost))
 
     def _qnode_frame(self, node: dict, boost: float) -> DataFrame | None:
         """Compile one AST node -> unlimited (doc_id, score) frame, or
@@ -697,44 +798,23 @@ class Searcher:
                 return self._sloppy_phrase_frame_multi(toks, slop, b)
             return self._phrase_frame(toks, b)
         if kind == "wild":
-            import re as _re
-
-            p = node["pattern"].lower()
-            rx = "".join(
-                ".*" if c == "*" else "." if c == "?" else _re.escape(c)
-                for c in p
-            )
-            lit = p.split("*", 1)[0].split("?", 1)[0]
-            stats = self.cat.read(self.spark, "term_stats")
-            cond = F.col("term").rlike(f"^{rx}$")
-            if lit:
-                cond = F.col("term").startswith(lit) & cond
-            terms = [r["term"] for r in stats.filter(cond).select("term").limit(1025).collect()]
-            if len(terms) > 1024:
-                raise ValueError(f"wildcard '{p}' expands to > 1024 terms")
+            terms = self._wildcard_terms(node["pattern"], 1024)
             if not terms:
                 return None
             return self._const_frame(self._matching_postings(terms), b)
         if kind == "range":
-            t = F.col("term")
-            cond = F.lit(True)
-            if node["lower"] is not None:
-                lo = node["lower"].lower()
-                cond = cond & (t >= lo if node["incl_lower"] else t > lo)
-            if node["upper"] is not None:
-                hi = node["upper"].lower()
-                cond = cond & (t <= hi if node["incl_upper"] else t < hi)
+            cond = _range_cond(
+                node["lower"],
+                node["upper"],
+                node["incl_lower"],
+                node["incl_upper"],
+            )
             postings = self.cat.read(self.spark, "postings").filter(cond)
             return self._const_frame(postings, b)
         if kind == "fuzzy":
-            q = node["text"].lower()
-            rows = [
-                (
-                    r["term"],
-                    idf(self.num_docs, int(r["df"])) * float(r["boost"]) * b,
-                )
-                for r in self._fuzzy_expansion(q, node["max_edits"]).collect()
-            ]
+            rows = self._fuzzy_weights(
+                node["text"].lower(), node["max_edits"], boost=b
+            )
             return self._weighted_or_frame(rows)
         if kind == "bool":
             musts, shoulds, nots = [], [], []
@@ -819,71 +899,35 @@ class Searcher:
         must_not = [
             t for s in (must_not or []) for t in self.analyzer.tokenize(s)
         ]
-        boosts = boosts or {}
         scoring = sorted(set(should) | set(must))
         dfs = self._term_stats(scoring)
-        must_present = [t for t in set(must)]
+        must_present = sorted(set(must))
         if any(t not in dfs for t in must_present):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        rows = [
-            (0, t, idf(self.num_docs, dfs[t]) * float(boosts.get(t, 1.0)))
-            for t in scoring
-            if t in dfs
-        ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[1] for r in rows]))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        n_must = F.sum(
-            F.when(F.col("term").isin(must_present), 1).otherwise(0)
-        )
+            return self._empty()
         should_present = sorted(set(should) & set(dfs))
         if min_should_match > 0 and len(should_present) < min_should_match:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        n_should = F.sum(
-            F.when(F.col("term").isin(should_present), 1).otherwise(0)
-        )
-        scored = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(
-                F.sum("_s").alias("score"),
-                n_must.alias("_nm"),
-                n_should.alias("_nsm"),
-            )
+            return self._empty()
+        rows = self._weights(scoring, boosts, dfs)
+        scored = self._scored(rows)
+        if scored is None:
+            return self._empty()
+
+        def n_matched(terms):
+            return F.sum(F.when(F.col("term").isin(terms), 1).otherwise(0))
+
+        scored = scored.groupBy("doc_id").agg(
+            _score_sum(len(rows)).alias("score"),
+            n_matched(must_present).alias("_nm"),
+            n_matched(should_present).alias("_nsm"),
         )
         if must_present:
             scored = scored.filter(F.col("_nm") >= len(must_present))
         if min_should_match > 0:
             scored = scored.filter(F.col("_nsm") >= min_should_match)
         if must_not:
-            excl = (
-                self._decoded(self._matching_postings(sorted(set(must_not))))
-                .select("doc_id")
-                .distinct()
-            )
+            excl = self._docs(self._matching_postings(sorted(set(must_not))))
             scored = scored.join(excl, "doc_id", "left_anti")
-        return (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top(scored.select("doc_id", "score"), k)
 
     def search_dismax(
         self,
@@ -900,45 +944,16 @@ class Searcher:
         docs matching >= 1 disjunct, Lucene's DisjunctionMaxScorer
         behavior. Same pruned-postings plan as search_boolean: broadcast
         query terms, In(term) pushdown, one groupBy(doc_id)."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        boosts = boosts or {}
-        dfs = self._term_stats(terms)
-        rows = [
-            (t, idf(self.num_docs, dfs[t]) * float(boosts.get(t, 1.0)))
-            for t in terms
-            if t in dfs
-        ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(
-                (
-                    F.max("_s")
-                    + F.lit(float(tie_breaker)) * (F.sum("_s") - F.max("_s"))
-                ).alias("score")
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        scored = self._scored(self._weights(self._terms(query), boosts))
+        if scored is None:
+            return self._empty()
+        best = F.max("_s")
+        rest = F.sum("_s") - best
+        return _top(
+            scored.groupBy("doc_id").agg(
+                (best + F.lit(float(tie_breaker)) * rest).alias("score")
+            ),
+            k,
         )
 
     def search_rm3(
@@ -963,12 +978,12 @@ class Searcher:
         doc_id-sorted forward index (pushed In(doc_id) point lookups,
         driver receives fb_docs arrays — never corpus data), then one
         normal weighted search over |query| + fb_terms terms."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         initial = self.search(query, k=fb_docs, method="dataframe").collect()
         if not initial:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         total = sum(r["score"] for r in initial) or 1.0
         p_dq = {r["doc_id"]: r["score"] / total for r in initial}
         if self.cat.is_committed("doc_terms_fwd"):
@@ -1028,19 +1043,11 @@ class Searcher:
         conversations. Returns (conv_id, score, n_turns_matched). The
         turn->conv join is on doc_id against the doc_id-sorted stored
         table; only matching turns join, never the corpus."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame(
-                [], "conv_id string, score double, n_turns_matched long"
+        scored = self._weighted_or_frame(self._weights(self._terms(query)))
+        if scored is None:
+            return self._empty(
+                "conv_id string, score double, n_turns_matched long"
             )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        scored = self._score_dataframe(
-            self._matching_postings([r[1] for r in rows]), qterms
-        )
         conv = self.cat.read(self.spark, "stored").select("doc_id", "conv_id")
         agg_fn = F.max("score") if agg == "max" else F.sum("score")
         return (
@@ -1098,16 +1105,11 @@ class Searcher:
             ),
         )[:max_query_terms]
         if not ranked:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
+            return self._empty(_RANKED)
         query = " ".join(t for _, t in ranked)
         res = self.search(query, k=k + 1, method="dataframe")
-        return (
-            res.filter(F.col("doc_id") != int(doc_id))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score")
+        return _top(res.filter(F.col("doc_id") != int(doc_id)), k).select(
+            "doc_id", "score"
         )
 
     def search_corrected(
@@ -1133,12 +1135,7 @@ class Searcher:
                 corrections[t] = cand[0]["term"]
                 fixed.append(cand[0]["term"])
         if not fixed:
-            return (
-                self.spark.createDataFrame(
-                    [], "doc_id long, score double, rank int"
-                ),
-                corrections,
-            )
+            return self._empty(_RANKED), corrections
         return self.search(" ".join(fixed), k=k, method=method), corrections
 
     def facets(self, query: str, facet_col: str, k: int = 10) -> DataFrame:
@@ -1147,18 +1144,9 @@ class Searcher:
         FeaturedProcessors.scala:103-130): distinct matching docIDs
         semi-joined to the stored metadata column, grouped. Matching-doc
         set work ∝ query postings; the stored join is doc_id-pruned."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats(terms)  # one collect job for all terms
-        present = [t for t in terms if t in stats]
-        if not present:
-            return self.spark.createDataFrame(
-                [], f"{facet_col} string, cnt long"
-            )
-        docs = (
-            self._decoded(self._matching_postings(present))
-            .select("doc_id")
-            .distinct()
-        )
+        docs = self._present_docs(self._terms(query))
+        if docs is None:
+            return self._empty(f"{facet_col} string, cnt long")
         return (
             self.cat.read(self.spark, "stored")
             .join(docs, "doc_id", "left_semi")
@@ -1180,7 +1168,7 @@ class Searcher:
         exact analyzed-term matches; requires
         ``store_term_vectors=True``). Driver-side by design — highlighting
         is a per-displayed-result operation, not a corpus scan."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         if not terms:
             raise ValueError("query analyzed to no terms")
         stored = (
@@ -1221,14 +1209,7 @@ class Searcher:
         matching = self.cat.read(self.spark, "postings").filter(
             F.col("term").startswith(prefix.lower())
         )
-        docs = (
-            self._decoded(matching)
-            .select("doc_id")
-            .distinct()
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
-        return docs.select("doc_id", F.lit(1.0).alias("score"))
+        return _first_k(self._docs(matching), k)
 
     def search_constant_score(
         self,
@@ -1259,17 +1240,9 @@ class Searcher:
         )
         mnot = sorted({t.lower() for t in must_not_terms})
         if mnot:
-            excl = (
-                self._decoded(self._matching_postings(mnot))
-                .select("doc_id")
-                .distinct()
-            )
+            excl = self._docs(self._matching_postings(mnot))
             cand = cand.join(excl, "doc_id", "left_anti")
-        return (
-            cand.orderBy(F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.lit(float(boost)).alias("score"))
-        )
+        return _first_k(cand, k, boost)
 
     def search_match_bool_prefix(self, query: str, k: int = 10) -> DataFrame:
         """ES match_bool_prefix over the index: the analyzed query's
@@ -1287,56 +1260,18 @@ class Searcher:
         groupBy(doc_id) — no join between the clause sides."""
         toks = self.analyzer.tokenize(query)
         if not toks:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         prefix, rest = toks[-1], sorted(set(toks[:-1]))
-        parts = []
-        if rest:
-            dfs = self._term_stats(rest)
-            present = [t for t in rest if t in dfs]
-            if present:
-                rows = [(t, idf(self.num_docs, dfs[t])) for t in present]
-                qterms = F.broadcast(
-                    self.spark.createDataFrame(rows, "term string, idf double")
-                )
-                score_expr = (
-                    F.col("idf")
-                    * F.col("tf")
-                    * F.lit(K1 + 1.0)
-                    / (
-                        F.col("tf")
-                        + F.lit(K1)
-                        * (
-                            F.lit(1.0 - B)
-                            + F.lit(B)
-                            * F.col("dl")
-                            / F.lit(self.avgdl or 1.0)
-                        )
-                    )
-                )
-                parts.append(
-                    self._decoded(self._matching_postings(present))
-                    .join(qterms, "term")
-                    .select("doc_id", score_expr.alias("_s"))
-                )
-        pdocs = (
-            self._decoded(
-                self.cat.read(self.spark, "postings").filter(
-                    F.col("term").startswith(prefix)
-                )
+        out = self._docs(
+            self.cat.read(self.spark, "postings").filter(
+                F.col("term").startswith(prefix)
             )
-            .select("doc_id")
-            .distinct()
-            .select("doc_id", F.lit(1.0).alias("_s"))
-        )
-        parts.append(pdocs)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return (
-            out.groupBy("doc_id")
-            .agg(F.round(F.sum("_s"), 6).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        ).select("doc_id", F.lit(1.0).alias("_s"))
+        scored = self._scored(self._weights(rest)) if rest else None
+        if scored is not None:
+            out = scored.select("doc_id", "_s").unionByName(out)
+        return _top(
+            out.groupBy("doc_id").agg(F.round(F.sum("_s"), 6).alias("score")), k
         )
 
     def search_wildcard(
@@ -1357,6 +1292,10 @@ class Searcher:
         dictionary would otherwise collect the vocabulary; Lucene's
         ReversedWildcardFilter — a second, reversed-term dictionary — is
         the index-side fix if leading-* must be fast at that scale)."""
+        terms = self._wildcard_terms(pattern, max_expansions)
+        return self._expanded_topk(terms, k)
+
+    def _wildcard_terms(self, pattern: str, max_expansions: int) -> list[str]:
         import re as _re
 
         p = pattern.lower()
@@ -1364,32 +1303,43 @@ class Searcher:
             ".*" if c == "*" else "." if c == "?" else _re.escape(c) for c in p
         )
         lit_prefix = p.split("*", 1)[0].split("?", 1)[0]
+        return self._expand(
+            "wildcard", pattern, f"^{rx}$", lit_prefix, max_expansions
+        )
+
+    def _expand(
+        self,
+        kind: str,
+        pattern: str,
+        rx: str,
+        lit_prefix: str,
+        max_expansions: int,
+    ) -> list[str]:
+        """Dictionary terms matching ``rx``; a literal prefix is pushed as a
+        startswith range the term-sorted dictionary min/max-prunes. More
+        than ``max_expansions`` raises (Lucene TooManyClauses)."""
         stats = self.cat.read(self.spark, "term_stats")
-        cond = F.col("term").rlike(f"^{rx}$")
+        cond = F.col("term").rlike(rx)
         if lit_prefix:
-            # pushed range prune on the term-sorted dictionary
             cond = F.col("term").startswith(lit_prefix) & cond
         expanded = stats.filter(cond).select("term").limit(max_expansions + 1)
         terms = [r["term"] for r in expanded.collect()]
         if len(terms) > max_expansions:
             raise ValueError(
-                f"wildcard '{pattern}' expands to > {max_expansions} terms "
+                f"{kind} '{pattern}' expands to > {max_expansions} terms "
                 "(Lucene TooManyClauses); narrow the pattern or raise "
                 "max_expansions"
             )
+        return terms
+
+    def _expanded_topk(self, terms: list[str], k: int) -> DataFrame:
+        """Constant-score disjunction over expanded dictionary terms."""
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         matching = self.cat.read(self.spark, "postings").filter(
             F.col("term").isin(terms)
         )
-        docs = (
-            self._decoded(matching)
-            .select("doc_id")
-            .distinct()
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
-        return docs.select("doc_id", F.lit(1.0).alias("score"))
+        return _first_k(self._docs(matching), k)
 
     def search_regexp(
         self, pattern: str, k: int = 10, max_expansions: int = 1024
@@ -1415,32 +1365,10 @@ class Searcher:
             if i + 1 < len(p) and p[i + 1] in "*+?{":
                 break  # ch is quantified by the next char, not literal
             lit.append(ch)
-        lit_prefix = "".join(lit)
-        stats = self.cat.read(self.spark, "term_stats")
-        cond = F.col("term").rlike(f"^(?:{p})$")
-        if lit_prefix:
-            cond = F.col("term").startswith(lit_prefix) & cond
-        expanded = stats.filter(cond).select("term").limit(max_expansions + 1)
-        terms = [r["term"] for r in expanded.collect()]
-        if len(terms) > max_expansions:
-            raise ValueError(
-                f"regexp '{pattern}' expands to > {max_expansions} terms "
-                "(Lucene TooManyClauses); narrow the pattern or raise "
-                "max_expansions"
-            )
-        if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        matching = self.cat.read(self.spark, "postings").filter(
-            F.col("term").isin(terms)
+        terms = self._expand(
+            "regexp", pattern, f"^(?:{p})$", "".join(lit), max_expansions
         )
-        docs = (
-            self._decoded(matching)
-            .select("doc_id")
-            .distinct()
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
-        return docs.select("doc_id", F.lit(1.0).alias("score"))
+        return self._expanded_topk(terms, k)
 
     def search_term_range(
         self,
@@ -1455,23 +1383,9 @@ class Searcher:
         postings table min/max-prunes; constant score, docID asc. Bounds
         are lowercased to match the all-lowercase term dictionary (same
         normalization as search_prefix / search_wildcard)."""
-        t = F.col("term")
-        cond = F.lit(True)
-        if lower is not None:
-            lower = lower.lower()
-            cond = cond & (t >= lower if include_lower else t > lower)
-        if upper is not None:
-            upper = upper.lower()
-            cond = cond & (t <= upper if include_upper else t < upper)
+        cond = _range_cond(lower, upper, include_lower, include_upper)
         matching = self.cat.read(self.spark, "postings").filter(cond)
-        docs = (
-            self._decoded(matching)
-            .select("doc_id")
-            .distinct()
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
-        return docs.select("doc_id", F.lit(1.0).alias("score"))
+        return _first_k(self._docs(matching), k)
 
     def search_fuzzy(
         self,
@@ -1504,25 +1418,20 @@ class Searcher:
         window — then a JVM ``levenshtein() <= 2*max_edits`` prefilter
         (DL >= Lev/2 always) bounds the rows the Arrow DL pass sees.
         Falls back to computed length on pre-``tlen`` indexes."""
-        q = term.lower()
-        expanded = self._fuzzy_expansion(q, max_edits, prefix_length).collect()
-        if not expanded:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        # fold the boost into the idf column and reuse the OR scorer
-        rows = [
-            (0, r["term"], idf(self.num_docs, int(r["df"])) * float(r["boost"]))
-            for r in expanded
+        rows = self._fuzzy_weights(term.lower(), max_edits, prefix_length)
+        frame = self._weighted_or_frame(rows)
+        return self._empty() if frame is None else _top(frame, k)
+
+    def _fuzzy_weights(
+        self, q: str, max_edits: int, prefix_length: int = 0, boost: float = 1.0
+    ) -> list[tuple[str, float]]:
+        """(expanded term, idf · fuzzy boost · boost) — the fuzzy boost is
+        folded into the idf column so the plain OR scorer applies."""
+        expanded = self._fuzzy_expansion(q, max_edits, prefix_length)
+        return [
+            (r["term"], idf(self.num_docs, int(r["df"])) * float(r["boost"]) * boost)
+            for r in expanded.collect()
         ]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        postings = self._matching_postings([r["term"] for r in expanded])
-        scored = self._score_dataframe(postings, qterms)
-        return (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
 
     def _fuzzy_expansion(
         self, q: str, max_edits: int, prefix_length: int = 0
@@ -1561,12 +1470,7 @@ class Searcher:
     def match_all(self, k: int = 10) -> DataFrame:
         """MatchAllDocsQuery (the reference ISearcher's default query,
         ISearcher.scala:42): every doc, constant score 1.0, docID asc."""
-        return (
-            self._not_deleted(self.cat.read(self.spark, "stored"))
-            .select("doc_id", F.lit(1.0).alias("score"))
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        return _first_k(self._not_deleted(self.cat.read(self.spark, "stored")), k)
 
     def search_filtered(
         self,
@@ -1582,30 +1486,17 @@ class Searcher:
         discard filtered-in docs. The allowed-docs side is a pushed-down
         equality scan of the ``stored`` table semi-joined to the scored
         candidates — work ∝ query postings + filter selectivity."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        scored = self._score_dataframe(
-            self._matching_postings([r[1] for r in rows]), qterms
-        )
         allowed = self.cat.read(self.spark, "stored")
         for c, v in sorted(where.items()):
             allowed = allowed.filter(F.col(c) == F.lit(v))
-        out = (
-            scored.join(allowed.select("doc_id"), "doc_id", "left_semi")
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.withColumn("rank", F.row_number().over(w))
+        return self._filtered_topk(query, allowed.select("doc_id"), k)
+
+    def _filtered_topk(self, query: str, allowed: DataFrame, k: int) -> DataFrame:
+        """Ranked BM25 top-k of the query restricted to ``allowed`` docs."""
+        scored = self._weighted_or_frame(self._weights(self._terms(query)))
+        if scored is None:
+            return self._empty(_RANKED)
+        return _ranked(_top(scored.join(allowed, "doc_id", "left_semi"), k))
 
     def search_filtered_indexed(
         self,
@@ -1632,27 +1523,7 @@ class Searcher:
             .filter(F.col("_nf") == len(fv))
             .select("doc_id")
         )
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        scored = self._score_dataframe(
-            self._matching_postings([r[1] for r in rows]), qterms
-        )
-        out = (
-            scored.join(allowed, "doc_id", "left_semi")
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.withColumn("rank", F.row_number().over(w))
+        return self._filtered_topk(query, allowed, k)
 
     def search_exists(self, fld: str, k: int = 10) -> DataFrame:
         """ES exists query over a keyword field: docs where the field
@@ -1664,14 +1535,7 @@ class Searcher:
         matching = self.cat.read(self.spark, "postings").filter(
             F.col("term").startswith(fld + ":")
         )
-        return (
-            self._decoded(matching)
-            .select("doc_id")
-            .distinct()
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.lit(1.0).alias("score"))
-        )
+        return _first_k(self._docs(matching), k)
 
     def facet_keyword(self, fld: str) -> DataFrame:
         """Keyword-field facet counts from the TERM DICTIONARY ALONE —
@@ -1712,40 +1576,12 @@ class Searcher:
         holes preserved), from the opt-in term_vectors table; the join is
         a per-doc pairing of two df-sized position lists, never
         corpus-sized."""
-        a = self.analyzer.tokenize(term_a)
-        b = self.analyzer.tokenize(term_b)
-        if len(a) != 1 or len(b) != 1:
-            raise ValueError("span_near clauses must analyze to one term each")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "span_near needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
-        pa = tv.filter(F.col("term") == a[0]).select(
-            "doc_id", F.col("positions").alias("_pa")
-        )
-        pb = tv.filter(F.col("term") == b[0]).select(
-            "doc_id", F.col("positions").alias("_pb")
-        )
-        win = int(slop) + 1
-        if in_order:
-            pair_ok = lambda p0: F.exists(
-                F.col("_pb"), lambda p1: (p1 > p0) & (p1 - p0 <= win)
-            )
-        else:
-            pair_ok = lambda p0: F.exists(
-                F.col("_pb"),
-                lambda p1: (p1 != p0) & (F.abs(p1 - p0) <= win),
-            )
-        n_spans = F.size(F.filter(F.col("_pa"), pair_ok))
-        return (
-            self._not_deleted(pa.join(pb, "doc_id"))
-            .select("doc_id", n_spans.cast("long").alias("n_spans"))
-            .filter(F.col("n_spans") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        ta, tb = self._single_terms("span_near clauses", term_a, term_b)
+        tv = self._term_vectors("span_near")
+        pa = _positions(tv, ta, "_pa")
+        pb = _positions(tv, tb, "_pb")
+        n_spans = F.size(F.filter(F.col("_pa"), _near(int(slop) + 1, in_order)))
+        return self._span_topk(pa.join(pb, "doc_id"), "n_spans", n_spans, k)
 
     def search_span_near_multi(
         self,
@@ -1762,28 +1598,14 @@ class Searcher:
         prune p_i − p₁ − i ≤ slop at every level, so dead prefixes stop
         immediately. Positions are full-stream (StopFilter holes
         preserved) from the k terms' df-sized term_vectors rows."""
-        toks = []
-        for t in terms:
-            a = self.analyzer.tokenize(t)
-            if len(a) != 1:
-                raise ValueError(
-                    "span_near clauses must analyze to one term each"
-                )
-            toks.append(a[0])
+        toks = self._single_terms("span_near clauses", *terms)
         if len(toks) < 2:
             raise ValueError("span_near_multi needs >= 2 clauses")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "span_near needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
+        tv = self._term_vectors("span_near")
         kk = len(toks)
-        tv = self.cat.read(self.spark, "term_vectors")
         cand = None
         for i, t in enumerate(toks):
-            p = tv.filter(F.col("term") == t).select(
-                "doc_id", F.col("positions").alias(f"_p{i}")
-            )
+            p = _positions(tv, t, f"_p{i}")
             cand = p if cand is None else cand.join(p, "doc_id")
 
         def completes(i, prev, first):
@@ -1800,13 +1622,7 @@ class Searcher:
         n_spans = F.size(
             F.filter(F.col("_p0"), lambda p0: completes(1, p0, p0))
         )
-        return (
-            self._not_deleted(cand)
-            .select("doc_id", n_spans.cast("long").alias("n_spans"))
-            .filter(F.col("n_spans") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._span_topk(cand, "n_spans", n_spans, k)
 
     def search_intervals(
         self,
@@ -1826,24 +1642,12 @@ class Searcher:
         qualifying intervals per doc, constant-score docID-asc
         retrieval. Positions from the opt-in term_vectors table: the
         pairing is a per-doc HOF over two df-sized position lists."""
-        a = self.analyzer.tokenize(term_a)
-        b = self.analyzer.tokenize(term_b)
-        if len(a) != 1 or len(b) != 1:
-            raise ValueError("interval clauses must analyze to one term each")
+        ta, tb = self._single_terms("interval clauses", term_a, term_b)
         if maxgaps < 0:
             raise ValueError(f"maxgaps must be >= 0, got {maxgaps}")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "intervals needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
-        pa = tv.filter(F.col("term") == a[0]).select(
-            "doc_id", F.col("positions").alias("_pa")
-        )
-        pb = tv.filter(F.col("term") == b[0]).select(
-            "doc_id", F.col("positions").alias("_pb")
-        )
+        tv = self._term_vectors("intervals")
+        pa = _positions(tv, ta, "_pa")
+        pb = _positions(tv, tb, "_pb")
 
         def minimal(p0):
             nb = F.array_min(F.filter(F.col("_pb"), lambda x: x > p0))
@@ -1854,13 +1658,7 @@ class Searcher:
             )
 
         n_iv = F.size(F.filter(F.col("_pa"), minimal))
-        return (
-            self._not_deleted(pa.join(pb, "doc_id"))
-            .select("doc_id", n_iv.cast("long").alias("n_intervals"))
-            .filter(F.col("n_intervals") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._span_topk(pa.join(pb, "doc_id"), "n_intervals", n_iv, k)
 
     def search_span_first(
         self, term: str, end: int, k: int = 10
@@ -1872,18 +1670,11 @@ class Searcher:
         match and ``n_first`` = matches inside the window. Plan: one
         pushed-equality term_vectors scan, per-doc list filter — never
         corpus-sized."""
-        toks = self.analyzer.tokenize(term)
-        if len(toks) != 1:
-            raise ValueError("span_first clause must analyze to one term")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "span_first needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
+        (t,) = self._single_terms("span_first clause", term)
+        tv = self._term_vectors("span_first")
         in_win = F.filter(F.col("positions"), lambda p: p < F.lit(int(end)))
         return (
-            self._not_deleted(tv.filter(F.col("term") == toks[0]))
+            self._not_deleted(tv.filter(F.col("term") == t))
             .select(
                 "doc_id",
                 F.size(in_win).cast("long").alias("n_first"),
@@ -1905,34 +1696,17 @@ class Searcher:
         (docID asc) with ``n_clean`` = surviving include positions.
         Plan: two pushed-equality term_vectors reads, LEFT join (df-sized
         frames), per-doc list filter."""
-        a = self.analyzer.tokenize(include)
-        b = self.analyzer.tokenize(exclude)
-        if len(a) != 1 or len(b) != 1:
-            raise ValueError("span_not clauses must analyze to one term each")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "span_not needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
-        pa = tv.filter(F.col("term") == a[0]).select(
-            "doc_id", F.col("positions").alias("_pa")
-        )
-        pb = tv.filter(F.col("term") == b[0]).select(
-            "doc_id", F.col("positions").alias("_pb")
-        )
+        ta, tb = self._single_terms("span_not clauses", include, exclude)
+        tv = self._term_vectors("span_not")
+        pa = _positions(tv, ta, "_pa")
+        pb = _positions(tv, tb, "_pb")
         win = int(slop) + 1
         clean = lambda p0: F.col("_pb").isNull() | ~F.exists(
             F.col("_pb"), lambda p1: F.abs(p1 - p0) <= win
         )
         n_clean = F.size(F.filter(F.col("_pa"), clean))
-        return (
-            self._not_deleted(pa.join(pb, "doc_id", "left"))
-            .select("doc_id", n_clean.cast("long").alias("n_clean"))
-            .filter(F.col("n_clean") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        joined = pa.join(pb, "doc_id", "left")
+        return self._span_topk(joined, "n_clean", n_clean, k)
 
     def search_span_or_near(
         self,
@@ -1963,12 +1737,7 @@ class Searcher:
             raise ValueError(
                 "span_or_near needs >=1 OR term and exactly one near term"
             )
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "span_or_near needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
+        tv = self._term_vectors("span_or_near")
         pa = (
             tv.filter(F.col("term").isin(alts))
             .groupBy("doc_id")
@@ -1978,52 +1747,19 @@ class Searcher:
                 )
             )
         )
-        pb = tv.filter(F.col("term") == b[0]).select(
-            "doc_id", F.col("positions").alias("_pb")
-        )
-        win = int(slop) + 1
-        if in_order:
-            pair_ok = lambda p0: F.exists(  # noqa: E731
-                F.col("_pb"), lambda p1: (p1 > p0) & (p1 - p0 <= win)
-            )
-        else:
-            pair_ok = lambda p0: F.exists(  # noqa: E731
-                F.col("_pb"),
-                lambda p1: (p1 != p0) & (F.abs(p1 - p0) <= win),
-            )
-        n_spans = F.size(F.filter(F.col("_pa"), pair_ok))
-        return (
-            self._not_deleted(pa.join(pb, "doc_id"))
-            .select("doc_id", n_spans.cast("long").alias("n_spans"))
-            .filter(F.col("n_spans") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        pb = _positions(tv, b[0], "_pb")
+        n_spans = F.size(F.filter(F.col("_pa"), _near(int(slop) + 1, in_order)))
+        return self._span_topk(pa.join(pb, "doc_id"), "n_spans", n_spans, k)
 
     def _span_pair_frames(self, big: tuple[str, str], little: str):
         """Shared retrieval for SpanContaining/SpanWithin: three pushed-
         equality term_vectors reads -> (doc_id, _pa, _pb, _pc) with the
         big pair inner-joined (both ends required) and little inner-joined
         (containment needs it). All frames are df-sized."""
-        a = self.analyzer.tokenize(big[0])
-        b = self.analyzer.tokenize(big[1])
-        c = self.analyzer.tokenize(little)
-        if len(a) != 1 or len(b) != 1 or len(c) != 1:
-            raise ValueError("span clauses must analyze to one term each")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "span containing/within needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
-        pa = tv.filter(F.col("term") == a[0]).select(
-            "doc_id", F.col("positions").alias("_pa")
-        )
-        pb = tv.filter(F.col("term") == b[0]).select(
-            "doc_id", F.col("positions").alias("_pb")
-        )
-        pc = tv.filter(F.col("term") == c[0]).select(
-            "doc_id", F.col("positions").alias("_pc")
+        terms = self._single_terms("span clauses", big[0], big[1], little)
+        tv = self._term_vectors("span containing/within")
+        pa, pb, pc = (
+            _positions(tv, t, f"_p{x}") for t, x in zip(terms, "abc")
         )
         return pa.join(pb, "doc_id").join(pc, "doc_id")
 
@@ -2052,13 +1788,7 @@ class Searcher:
             ),
         )
         n_spans = F.size(F.filter(F.col("_pa"), contains))
-        return (
-            self._not_deleted(joined)
-            .select("doc_id", n_spans.cast("long").alias("n_spans"))
-            .filter(F.col("n_spans") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._span_topk(joined, "n_spans", n_spans, k)
 
     def search_span_within(
         self, little: str, big: tuple[str, str], slop: int = 0, k: int = 10
@@ -2079,13 +1809,7 @@ class Searcher:
             ),
         )
         n_within = F.size(F.filter(F.col("_pc"), inside))
-        return (
-            self._not_deleted(joined)
-            .select("doc_id", n_within.cast("long").alias("n_within"))
-            .filter(F.col("n_within") > 0)
-            .orderBy(F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._span_topk(joined, "n_within", n_within, k)
 
     def search_boosting(
         self,
@@ -2103,53 +1827,18 @@ class Searcher:
         over the positive terms' postings, plus ONE equality left-join
         against the negative terms' distinct-docID frame (postings-sized,
         never corpus-sized)."""
-        pterms = sorted(set(self.analyzer.tokenize(positive)))
-        nterms = sorted(set(self.analyzer.tokenize(negative)))
-        dfs = self._term_stats(pterms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in pterms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        avgdl = self.avgdl or 1.0
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        pos = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("_pos"))
-        )
-        neg_present = [t for t in nterms if t in self._term_stats(nterms)]
-        if neg_present:
-            neg = (
-                self._decoded(self._matching_postings(neg_present))
-                .select("doc_id")
-                .distinct()
-                .withColumn("_neg", F.lit(True))
-            )
-            pos = pos.join(neg, "doc_id", "left")
-        else:
-            pos = pos.withColumn("_neg", F.lit(None).cast("boolean"))
-        score = F.when(
+        pos = self._weighted_or_frame(self._weights(self._terms(positive)))
+        if pos is None:
+            return self._empty()
+        neg = self._present_docs(self._terms(negative))
+        if neg is None:
+            return _top(pos, k)
+        demoted = F.when(
             F.col("_neg").isNotNull(),
-            F.col("_pos") * F.lit(float(negative_boost)),
-        ).otherwise(F.col("_pos"))
-        return (
-            pos.select("doc_id", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+            F.col("score") * F.lit(float(negative_boost)),
+        ).otherwise(F.col("score"))
+        pos = pos.join(neg.withColumn("_neg", F.lit(True)), "doc_id", "left")
+        return _top(pos.select("doc_id", demoted.alias("score")), k)
 
     def search_bm25_variant(
         self,
@@ -2175,40 +1864,16 @@ class Searcher:
         if variant not in ("plus", "l"):
             raise ValueError(f"unknown BM25 variant: {variant}")
         d = (1.0 if variant == "plus" else 0.5) if delta is None else float(delta)
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
-        norm = (
-            F.lit(1.0 - B)
-            + F.lit(B) * F.col("dl").cast("double") / F.lit(self.avgdl or 1.0)
-        )
         if variant == "plus":
             s = F.col("idf") * (
-                F.lit(K1 + 1.0) * tf / (F.lit(K1) * norm + tf) + F.lit(d)
+                bm25_impact(tf, F.col("dl"), self.avgdl) + F.lit(d)
             )
         else:
-            cp = tf / norm
-            s = (
-                F.col("idf")
-                * F.lit(K1 + 1.0)
-                * (cp + F.lit(d))
-                / (F.lit(K1) + cp + F.lit(d))
-            )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+            norm = 1.0 - B + B * F.col("dl").cast("double") / (self.avgdl or 1.0)
+            # BM25's saturation of the shifted c' + δ at unit norm (dl = avgdl)
+            s = F.col("idf") * bm25_impact(tf / norm + F.lit(d), 1.0, 1.0)
+        return self._sum_topk(self._weights(self._terms(query)), "idf", s, k)
 
     def significant_text(self, query: str, k: int = 15) -> DataFrame:
         """Elasticsearch significant_text aggregation over a query's
@@ -2229,23 +1894,14 @@ class Searcher:
         fraction, cap the foreground first (ES wraps significant_text in
         a sampler agg for the same reason), e.g. by feeding a top-k
         docset instead of the full match set."""
-        qterms = sorted(set(self.analyzer.tokenize(query)))
+        qterms = self._terms(query)
         present = [t for t in qterms if t in self._term_stats(qterms)]
         if not present:
-            return self.spark.createDataFrame(
-                [], "term string, fg_count long, bg_count long, g2 double"
+            return self._empty(
+                "term string, fg_count long, bg_count long, g2 double"
             )
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "significant_text needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        fg_docs = (
-            self._decoded(self._matching_postings(present))
-            .select("doc_id")
-            .distinct()
-        )
-        tv = self.cat.read(self.spark, "term_vectors")
+        tv = self._term_vectors("significant_text")
+        fg_docs = self._docs(self._matching_postings(present))
         fg = (
             tv.join(fg_docs, "doc_id")
             .groupBy("term")
@@ -2324,12 +1980,11 @@ class Searcher:
             g_idf = idf(self.num_docs, max(dfs[t] for t in present))
             rows.extend((gid, t, g_idf) for t in present)
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         qterms = F.broadcast(
             self.spark.createDataFrame(rows, "gid int, term string, idf double")
         )
         decoded = self._decoded(self._matching_postings([r[1] for r in rows]))
-        avgdl = self.avgdl or 1.0
         blended = (
             decoded.join(qterms, "term")
             .groupBy("doc_id", "gid")
@@ -2339,23 +1994,8 @@ class Searcher:
                 F.first("idf").alias("idf"),
             )
         )
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return (
-            blended.withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        scored = blended.withColumn("_s", _bm25(F.col("idf"), self.avgdl))
+        return _top(scored.groupBy("doc_id").agg(F.sum("_s").alias("score")), k)
 
     def search_lm(
         self,
@@ -2383,20 +2023,14 @@ class Searcher:
         corpus."""
         if similarity not in ("dirichlet", "jm"):
             raise ValueError(f"unknown LM similarity: {similarity}")
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats_full(terms)
+        terms = self._terms(query)
+        stats = self._term_stats(terms, cf=True)
         total = float(self.sum_dl)
         rows = [
             (t, (stats[t][1] + 1.0) / (total + 1.0))
             for t in terms
             if t in stats
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, p double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         dl = F.col("dl").cast("double")
         if similarity == "dirichlet":
@@ -2410,14 +2044,7 @@ class Searcher:
                 F.lit(1.0)
                 + (F.lit(1.0 - lam) * tf / dl) / (F.lit(lam) * F.col("p"))
             )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._sum_topk(rows, "p", s, k)
 
     def search_classic(self, query: str, k: int = 10) -> DataFrame:
         """Lucene ClassicSimilarity (the pre-6.x TFIDFSimilarity default):
@@ -2428,32 +2055,19 @@ class Searcher:
         Deviation, documented: Lucene's norm is the lossy byte-encoded
         1/sqrt(dl) — this keeps the exact value instead of quantizing.
         Same broadcast-join scoring plan as BM25."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         dfs = self._term_stats(terms)
         rows = [
             (t, (1.0 + math.log(self.num_docs / (dfs[t] + 1.0))) ** 2)
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf2 double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         s = (
             F.sqrt(F.col("tf").cast("double"))
             * F.col("idf2")
             / F.sqrt(F.col("dl").cast("double"))
         )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._sum_topk(rows, "idf2", s, k)
 
     def search_dfr(self, query: str, k: int = 10, c: float = 1.0) -> DataFrame:
         """Divergence-from-randomness ranking, the Lucene
@@ -2470,30 +2084,22 @@ class Searcher:
         similarities — only the score expression changes; work is ∝ query
         postings. (WAND block-max metadata is BM25-specific, so DFR uses
         full DataFrame scoring.)"""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         dfs = self._term_stats(terms)
         rows = [
             (t, math.log2((self.num_docs + 1.0) / (dfs[t] + 0.5)))
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, log2in double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        tfn = F.col("tf").cast("double") * F.log2(
-            F.lit(1.0) + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
-        )
+        tfn = self._h2_tfn(c)
         s = tfn * F.col("log2in") / (tfn + F.lit(1.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return self._sum_topk(rows, "log2in", s, k)
+
+    def _h2_tfn(self, c: float) -> Column:
+        """DFR NormalizationH2: tfn = tf * log2(1 + c * avgdl / dl)."""
+        return F.col("tf").cast("double") * F.log2(
+            F.lit(1.0)
+            + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
         )
 
     def search_axiomatic(
@@ -2508,33 +2114,20 @@ class Searcher:
         The (N+1)/df idf base is Lucene's AxiomaticF2EXP variant of the
         paper's N/df. Same broadcast-join + partial-agg plan as the other
         DataFrame similarities."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         dfs = self._term_stats(terms)
         rows = [
             (t, ((self.num_docs + 1.0) / dfs[t]) ** kidf)
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idfk double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         expr = (
             F.col("idfk")
             * tf
             / (tf + F.lit(s) + F.lit(s) * F.col("dl").cast("double") / F.lit(self.avgdl or 1.0))
         )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._sum_topk(rows, "idfk", expr, k)
 
     def search_ib(self, query: str, k: int = 10, c: float = 1.0) -> DataFrame:
         """Information-based ranking, the Lucene
@@ -2550,31 +2143,15 @@ class Searcher:
         plan is the same broadcast-join + partial-agg shape as the other
         DataFrame similarities (work ∝ query postings, never the
         corpus)."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
+        terms = self._terms(query)
         dfs = self._term_stats(terms)
         rows = [
             (t, (dfs[t] + 1.0) / (self.num_docs + 1.0))
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, lam double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        tfn = F.col("tf").cast("double") * F.log2(
-            F.lit(1.0) + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
-        )
-        s = F.log(F.lit(1.0) + tfn / F.col("lam"))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        s = F.log(F.lit(1.0) + self._h2_tfn(c) / F.col("lam"))
+        return self._sum_topk(rows, "lam", s, k)
 
     def search_dfi(self, query: str, k: int = 10) -> DataFrame:
         """Divergence-from-independence ranking, the Lucene
@@ -2593,16 +2170,10 @@ class Searcher:
         cf and total are collection scalars (term-dictionary point lookup
         + field_stats broadcast); same broadcast-join + partial-agg plan
         as the other DataFrame similarities."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats_full(terms)
+        terms = self._terms(query)
+        stats = self._term_stats(terms, cf=True)
         total = float(self.sum_dl)
         rows = [(t, float(stats[t][1])) for t in terms if t in stats]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, cf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         expected = (
             (F.col("cf") + F.lit(1.0))
@@ -2613,14 +2184,7 @@ class Searcher:
             tf > expected,
             F.log2((tf - expected) * (tf - expected) / expected + F.lit(1.0)),
         ).otherwise(F.lit(0.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._sum_topk(rows, "cf", s, k)
 
     def search_pl2(self, query: str, k: int = 10, c: float = 1.0) -> DataFrame:
         """PL2 ranking — the DFR composition BasicModelP (Poisson) +
@@ -2638,36 +2202,21 @@ class Searcher:
         λ is a per-term scalar (term-dictionary point lookup); same
         broadcast-join + partial-agg plan as the other DataFrame
         similarities — work ∝ query postings, never the corpus."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats_full(terms)
+        terms = self._terms(query)
+        stats = self._term_stats(terms, cf=True)
         rows = [
             (t, stats[t][1] / float(self.num_docs))
             for t in terms
             if t in stats and stats[t][1] > 0
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, lam double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         log2e = 1.0 / math.log(2.0)
-        tfn = F.col("tf").cast("double") * F.log2(
-            F.lit(1.0) + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
-        )
+        tfn = self._h2_tfn(c)
         s = (
             tfn * F.log2(tfn / F.col("lam"))
             + (F.col("lam") - tfn) * F.lit(log2e)
             + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tfn)
         ) / (tfn + F.lit(1.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._sum_topk(rows, "lam", s, k)
 
     def search_dph(self, query: str, k: int = 10) -> DataFrame:
         """DPH ranking — the parameter-free hypergeometric DFR model
@@ -2685,19 +2234,13 @@ class Searcher:
         exactly in the corpus twin. No tunable parameter — cf and N are
         collection scalars; same broadcast-join + partial-agg plan as
         the other DataFrame similarities."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats_full(terms)
+        terms = self._terms(query)
+        stats = self._term_stats(terms, cf=True)
         rows = [
             (t, float(stats[t][1]))
             for t in terms
             if t in stats and stats[t][1] > 0
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, cf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         dl = F.col("dl").cast("double")
         f = tf / dl
@@ -2717,14 +2260,7 @@ class Searcher:
                 + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tf * (F.lit(1.0) - f))
             ),
         ).otherwise(F.lit(0.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._sum_topk(rows, "cf", s, k)
 
     def search_function_score(
         self,
@@ -2745,34 +2281,9 @@ class Searcher:
         reads ONLY (doc_id, ts) from stored (column-pruned) and joins on
         doc_id BEFORE top-k — the decay must reorder candidates, so it
         cannot be applied after the limit."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        bm25 = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        cand = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", bm25)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("_bm25"))
-        )
+        cand = self._weighted_or_frame(self._weights(self._terms(query)))
+        if cand is None:
+            return self._empty()
         if not half_life_days > 0:
             raise ValueError(
                 f"half_life_days must be > 0, got {half_life_days}"
@@ -2791,12 +2302,12 @@ class Searcher:
             F.lit(origin).cast("timestamp").cast("double")
             - F.col(ts_col).cast("double"),
         )
-        return (
-            cand.join(stored, "doc_id")
-            .withColumn("score", F.col("_bm25") * F.exp(-F.lit(rate) * age))
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return _top(
+            cand.join(stored, "doc_id").select(
+                "doc_id",
+                (F.col("score") * F.exp(-F.lit(rate) * age)).alias("score"),
+            ),
+            k,
         )
 
     def search_tree(self, node: dict, k: int = 10) -> DataFrame:
@@ -2819,12 +2330,7 @@ class Searcher:
         terms = sorted(set(self._tree_terms(node)))
         dfs = self._term_stats(terms)
         frame = self._tree_frame(node, dfs)
-        if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return (
-            frame.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._empty() if frame is None else _top(frame, k)
 
     def _tree_terms(self, node: dict) -> list[str]:
         if "term" in node:
@@ -2852,20 +2358,9 @@ class Searcher:
                 return None
             w = idf(self.num_docs, dfs[t]) * float(node.get("boost", 1.0))
             decoded = self._decoded(self._matching_postings([t]))
-            score = (
-                F.lit(w)
-                * F.col("tf")
-                * F.lit(K1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(K1)
-                    * (
-                        F.lit(1.0 - B)
-                        + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                    )
-                )
+            return decoded.select(
+                "doc_id", _bm25(F.lit(w), self.avgdl).alias("score")
             )
-            return decoded.select("doc_id", score.alias("score"))
         if "and" in node:
             out = None
             for c in node["and"]:
@@ -2927,97 +2422,42 @@ class Searcher:
         terms = self.analyzer.tokenize(phrase)
         if len(terms) != 2:
             raise ValueError("rescore phrase must analyze to two terms")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "rescore needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
+        tv = self._term_vectors("rescore")
         first = self.search(query, k=window, method="dataframe").select(
             "doc_id", F.round("score", 6).alias("_s1")
         )
         cand = [r["doc_id"] for r in first.collect()]  # window-bounded
         if not cand:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         dfs = self._term_stats(terms)
-        ph = None
+        out = first.withColumn("_s2", F.lit(None).cast("double"))
         if terms[0] in dfs and terms[1] in dfs:
             idf_total = idf(self.num_docs, dfs[terms[0]]) + idf(
                 self.num_docs, dfs[terms[1]]
             )
-            tv = self.cat.read(self.spark, "term_vectors").filter(
-                F.col("doc_id").isin(cand)  # pushed In(doc_id), window-sized
+            # pushed In(doc_id), window-sized
+            ph = self._exact_phrase_frame(
+                tv.filter(F.col("doc_id").isin(cand)), terms, idf_total
             )
-            pa = tv.filter(F.col("term") == terms[0]).select(
-                "doc_id", F.col("positions").alias("_pa")
-            )
-            pb = tv.filter(F.col("term") == terms[1]).select(
-                "doc_id", F.col("positions").alias("_pb")
-            )
-            tf_col = F.size(
-                F.filter(
-                    F.col("_pa"),
-                    lambda p0: F.exists(F.col("_pb"), lambda p1: p1 == p0 + 1),
-                )
-            ).cast("double")
-            dl_tbl = self.cat.read(self.spark, "doc_lens").select(
-                "doc_id", "dl"
-            )
-            ph = (
-                pa.join(pb, "doc_id")
-                .withColumn("tf", tf_col)
-                .filter(F.col("tf") > 0)
-                .join(dl_tbl, "doc_id")
-                .select(
-                    "doc_id",
-                    (
-                        F.lit(idf_total)
-                        * F.col("tf")
-                        * F.lit(K1 + 1.0)
-                        / (
-                            F.col("tf")
-                            + F.lit(K1)
-                            * (
-                                F.lit(1.0 - B)
-                                + F.lit(B)
-                                * F.col("dl")
-                                / F.lit(self.avgdl or 1.0)
-                            )
-                        )
-                    ).alias("_s2"),
-                )
-            )
-        out = first
-        if ph is not None:
+            ph = ph.withColumnRenamed("score", "_s2")
             out = first.join(ph, "doc_id", "left")
-        else:
-            out = first.withColumn("_s2", F.lit(None).cast("double"))
-        return (
+        return _top(
             out.select(
                 "doc_id",
                 (
                     F.col("_s1")
                     + F.lit(weight) * F.coalesce(F.col("_s2"), F.lit(0.0))
                 ).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            ),
+            k,
         )
 
     def count(self, query: str) -> int:
         """Lucene IndexSearcher.count: how many docs match >= 1 query term
         — no scoring, no ranking, just the pushed-In(term) postings scan
         and a distinct count."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats(terms)
-        present = [t for t in terms if t in stats]
-        if not present:
-            return 0
-        return (
-            self._decoded(self._matching_postings(present))
-            .select("doc_id")
-            .distinct()
-            .count()
-        )
+        docs = self._present_docs(self._terms(query))
+        return 0 if docs is None else docs.count()
 
     def search_tiered(
         self,
@@ -3056,71 +2496,35 @@ class Searcher:
         # is provably complete: every unfetched doc has exact score <=
         # the last fetched exact score, and rounding is monotone, so once
         # round(last_exact, 6) < the rounded boundary value at position
-        # `window`, no unfetched doc can tie into the window. Doubling
-        # terminates in O(log(ties)) passes; the first pass almost always
-        # suffices.
-        k2 = window
+        # `window`, no unfetched doc can tie into the window. The first
+        # fetch already exceeds the window; doubling terminates in
+        # O(log(ties)) passes.
+        k2 = 2 * window
         while True:
             fetched = (
                 tier.search(query, k=k2, method=method)
                 .select("doc_id", "score")
                 .collect()
-            )  # window-bounded (k2 = window * 2^j, ties-only growth)
+            )  # window-bounded (k2 = 2 * window * 2^j, ties-only growth)
             ranked = sorted(
-                ((round(r["score"], 6), r["doc_id"]) for r in fetched),
+                ((_round6(r["score"]), r["doc_id"]) for r in fetched),
                 key=lambda t: (-t[0], t[1]),
             )
             if len(fetched) < k2 or len(ranked) <= window:
                 break  # tier exhausted — the fetch IS the whole matchset
             boundary = ranked[window - 1][0]
-            last_exact_rounded = round(
-                min(r["score"] for r in fetched), 6
-            )
-            if last_exact_rounded < boundary:
+            if _round6(min(r["score"] for r in fetched)) < boundary:
                 break
             k2 *= 2
         cand = [d for _, d in ranked[:window]]
         if not cand:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        # `t in dfs`, not dfs[t] > 0: _term_stats omits absent terms, so
-        # a mixed query (one indexed + one OOV term) must drop the OOV
-        # term here rather than KeyError (dfs entries are always > 0).
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
+            return self._empty(_RANKED)
+        # OOV terms drop out in _weights (the tier matched on the others)
+        rows = self._weights(self._terms(query))
+        scored = self._scored(rows).filter(
+            F.col("doc_id").isin(cand)  # window-sized
         )
-        decoded = self._decoded(
-            self._matching_postings([t for t, _ in rows])
-        ).filter(
-            F.col("doc_id").isin(cand)  # pushed In(doc_id), window-sized
-        )
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        out = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.withColumn("rank", F.row_number().over(w))
+        return _ranked(_top(_sum_scores(scored, len(rows)), k))
 
     def search_after(
         self,
@@ -3135,41 +2539,14 @@ class Searcher:
         OFFSET anti-pattern — page N never recomputes or transfers pages
         1..N-1; the cursor predicate is one comparison folded into the
         same scored scan, so every page costs the same as page one."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        bm25 = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
+        scored = self._weighted_or_frame(self._weights(self._terms(query)))
+        if scored is None:
+            return self._empty()
         cursor = (F.col("score") < F.lit(after_score)) | (
             (F.col("score") == F.lit(after_score))
             & (F.col("doc_id") > F.lit(after_doc_id))
         )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", bm25)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .filter(cursor)  # prunes BEFORE the ordered top-k heap
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top(scored.filter(cursor), k)  # prunes BEFORE the top-k heap
 
     def search_sorted(
         self,
@@ -3196,18 +2573,9 @@ class Searcher:
         path (the k-smallest-docID set == limit k under
         (value direction, doc_id asc), since doc_id rank IS that
         order); asserted in tests/test_index_sort.py."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats(terms)
-        present = [t for t in terms if t in stats]
-        if not present:
-            return self.spark.createDataFrame(
-                [], f"doc_id long, {sort_col} string"
-            )
-        matching = (
-            self._decoded(self._matching_postings(present))
-            .select("doc_id")
-            .distinct()
-        )
+        matching = self._present_docs(self._terms(query))
+        if matching is None:
+            return self._empty(f"doc_id long, {sort_col} string")
         counters = self.cat.manifest("stored").get("counters", {})
         isort = counters.get("index_sort") or []
         idesc = counters.get("index_sort_desc") or []
@@ -3254,16 +2622,9 @@ class Searcher:
         dl joins from doc_lens on the candidate doc set."""
         if slop < 0:
             raise ValueError(f"slop must be >= 0, got {slop}")
-        a = self.analyzer.tokenize(term_a)
-        b = self.analyzer.tokenize(term_b)
-        if len(a) != 1 or len(b) != 1:
-            raise ValueError(
-                "sloppy_phrase clauses must analyze to one term each"
-            )
-        frame = self._sloppy_phrase_frame(a[0], b[0], int(slop), 1.0)
-        if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        ta, tb = self._single_terms("sloppy_phrase clauses", term_a, term_b)
+        frame = self._sloppy_phrase_frame(ta, tb, int(slop), 1.0)
+        return self._empty() if frame is None else _top(frame, k)
 
     def _sloppy_phrase_frame(
         self, ta: str, tb: str, slop: int, boost: float
@@ -3271,22 +2632,13 @@ class Searcher:
         """Unlimited (doc_id, score) frame of the two-term sloppy phrase
         (the composable form search_sloppy_phrase and the query-string
         parsers' \"a b\"~N clauses share)."""
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "sloppy_phrase needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
+        tv = self._term_vectors("sloppy_phrase")
         dfs = self._term_stats([ta, tb])
         if ta not in dfs or tb not in dfs:
             return None
         idf_total = idf(self.num_docs, dfs[ta]) + idf(self.num_docs, dfs[tb])
-        tv = self.cat.read(self.spark, "term_vectors")
-        pa = tv.filter(F.col("term") == ta).select(
-            "doc_id", F.col("positions").alias("_pa")
-        )
-        pb = tv.filter(F.col("term") == tb).select(
-            "doc_id", F.col("positions").alias("_pb")
-        )
+        pa = _positions(tv, ta, "_pa")
+        pb = _positions(tv, tb, "_pb")
         win = int(slop) + 1
         tf_col = F.aggregate(
             F.col("_pa"),
@@ -3300,25 +2652,12 @@ class Searcher:
                 lambda a2, p1: a2 + F.lit(1.0) / (p1 - p0),
             ),
         )
-        dl_tbl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
-        avgdl = self.avgdl or 1.0
-        scored = (
+        cand = (
             self._not_deleted(pa.join(pb, "doc_id"))
             .withColumn("tf", tf_col)
             .filter(F.col("tf") > 0)
-            .join(dl_tbl, "doc_id")
         )
-        score_expr = (
-            F.lit(idf_total * float(boost))
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return scored.select("doc_id", score_expr.alias("score"))
+        return self._phrase_scores(cand, idf_total * float(boost))
 
     def search_sloppy_phrase_multi(
         self, query: str, slop: int = 2, k: int = 10
@@ -3347,31 +2686,22 @@ class Searcher:
             frame = self._sloppy_phrase_frame(toks[0], toks[1], int(slop), 1.0)
         else:
             frame = self._sloppy_phrase_frame_multi(toks, int(slop), 1.0)
-        if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._empty() if frame is None else _top(frame, k)
 
     def _sloppy_phrase_frame_multi(
         self, terms: list, slop: int, boost: float
     ) -> DataFrame | None:
         """Unlimited (doc_id, score) frame of the k-term sloppy phrase
         (see search_sloppy_phrase_multi for the tf contract)."""
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "sloppy_phrase needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
+        tv = self._term_vectors("sloppy_phrase")
         kk = len(terms)
         dfs = self._term_stats(sorted(set(terms)))
         if any(t not in dfs for t in terms):
             return None
         idf_total = sum(idf(self.num_docs, dfs[t]) for t in terms)
-        tv = self.cat.read(self.spark, "term_vectors")
         cand = None
         for i, t in enumerate(terms):
-            p = tv.filter(F.col("term") == t).select(
-                "doc_id", F.col("positions").alias(f"_p{i}")
-            )
+            p = _positions(tv, t, f"_p{i}")
             cand = p if cand is None else cand.join(p, "doc_id")
 
         def fold(i, prev, first):
@@ -3399,25 +2729,12 @@ class Searcher:
             F.lit(0.0),
             lambda acc, p0: acc + fold(1, p0, p0),
         )
-        dl_tbl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
-        avgdl = self.avgdl or 1.0
-        scored = (
+        cand = (
             self._not_deleted(cand)
             .withColumn("tf", tf_col)
             .filter(F.col("tf") > 0)
-            .join(dl_tbl, "doc_id")
         )
-        score_expr = (
-            F.lit(idf_total * float(boost))
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return scored.select("doc_id", score_expr.alias("score"))
+        return self._phrase_scores(cand, idf_total * float(boost))
 
     def search_collapse(
         self, query: str, k: int = 10, collapse_col: str = "conv_id"
@@ -3433,49 +2750,21 @@ class Searcher:
         to (doc_id, collapse_col); the per-group head is a window over the
         candidate set partitioned by the group key, then global top-k —
         never a corpus-wide window."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame(
-                [], f"doc_id long, {collapse_col} string, score double"
-            )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        bm25 = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        cand = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", bm25)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-        )
+        cand = self._weighted_or_frame(self._weights(self._terms(query)))
+        if cand is None:
+            return self._empty(f"doc_id long, {collapse_col} string, score double")
         stored = self.cat.read(self.spark, "stored").select(
             "doc_id", collapse_col
         )
         head = Window.partitionBy(collapse_col).orderBy(
             F.desc("score"), F.asc("doc_id")
         )
-        return (
+        return _top(
             cand.join(stored, "doc_id")
             .withColumn("_rn", F.row_number().over(head))
             .filter(F.col("_rn") == 1)
-            .select("doc_id", collapse_col, "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            .select("doc_id", collapse_col, "score"),
+            k,
         )
 
     def facet_ranges(
@@ -3493,16 +2782,9 @@ class Searcher:
         facet_col). Returns (bucket, cnt) ordered by bucket."""
         if not width > 0:
             raise ValueError(f"facet width must be > 0, got {width}")
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        stats = self._term_stats(terms)
-        present = [t for t in terms if t in stats]
-        if not present:
-            return self.spark.createDataFrame([], "bucket double, cnt long")
-        matching = (
-            self._decoded(self._matching_postings(present))
-            .select("doc_id")
-            .distinct()
-        )
+        matching = self._present_docs(self._terms(query))
+        if matching is None:
+            return self._empty("bucket double, cnt long")
         stored = self.cat.read(self.spark, "stored").select(
             "doc_id", facet_col
         )
@@ -3553,18 +2835,13 @@ class Searcher:
         ]
         if not norm or any(not g for g in norm):
             raise ValueError("every multi-phrase slot needs >= 1 term")
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "multi_phrase needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
         all_terms = sorted({t for g in norm for t in g})
+        tv = self._term_vectors("multi_phrase").filter(
+            F.col("term").isin(all_terms)
+        )
         dfs = self._term_stats(all_terms)
         idf_total = sum(
             idf(self.num_docs, dfs[t]) for t in all_terms if t in dfs
-        )
-        tv = self.cat.read(self.spark, "term_vectors").filter(
-            F.col("term").isin(all_terms)
         )
         # per-slot merged position lists: (doc_id, _p0, _p1, ...)
         merged = None
@@ -3594,29 +2871,12 @@ class Searcher:
             return m if m is not None else F.lit(True)
 
         tf_col = F.size(F.filter(F.col("_p0"), slot_match)).cast("double")
-        dl_tbl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
-        avgdl = self.avgdl or 1.0
-        scored = (
+        cand = (
             self._not_deleted(merged)
             .withColumn("tf", tf_col)
             .filter(F.col("tf") > 0)
-            .join(dl_tbl, "doc_id")
         )
-        score_expr = (
-            F.lit(idf_total)
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return (
-            scored.select("doc_id", score_expr.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top(self._phrase_scores(cand, idf_total), k)
 
     def search_phrase_prefix(
         self, query: str, k: int = 10, max_expansions: int = 50
@@ -3650,7 +2910,7 @@ class Searcher:
             )
         ]
         if not lead or not exp:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         return self.search_multi_phrase([[t] for t in lead] + [exp], k=k)
 
     def search_batch(
@@ -3664,29 +2924,33 @@ class Searcher:
         sets + idf weights form a tiny broadcast frame.
         """
         queries = list(queries)
-        per_q_terms: dict[int, list[str]] = {
-            qid: sorted(set(self.analyzer.tokenize(q))) for qid, q, _ in queries
-        }
+        per_q_terms = {qid: self._terms(q) for qid, q, _ in queries}
         ks = {qid: int(k) for qid, _, k in queries}
         all_terms = sorted({t for ts in per_q_terms.values() for t in ts})
         dfs = self._term_stats(all_terms)
-        # (qid, term, idf) — only terms that exist in the index
-        rows = [
-            (qid, t, idf(self.num_docs, dfs[t]))
-            for qid, ts in per_q_terms.items()
-            for t in ts
-            if t in dfs
-        ]
+        # (qid, term, idf, pos) — only terms that exist in the index;
+        # pos orders a query's terms for _score_sum
+        rows = []
+        for qid, ts in per_q_terms.items():
+            present = [t for t in ts if t in dfs]
+            rows += [
+                (qid, t, idf(self.num_docs, dfs[t]), i)
+                for i, t in enumerate(present)
+            ]
         if not rows:
-            return self.spark.createDataFrame(
-                [], "qid int, rank int, doc_id long, score double"
-            )
+            return self._empty("qid int, rank int, doc_id long, score double")
         qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
+            self.spark.createDataFrame(
+                rows, "qid int, term string, idf double, pos int"
+            )
         )
         postings = self._matching_postings(sorted({r[1] for r in rows}))
         if method == "dataframe":
-            scored = self._score_dataframe(postings, qterms)
+            joined = self._decoded(postings).join(qterms, "term")
+            n = 1 + max(r[3] for r in rows)
+            scored = _sum_scores(
+                _with_bm25(joined, self.avgdl), n, "qid", "doc_id"
+            )
         elif method in ("wand", "maxscore"):
             scored = self._score_wand(postings, qterms, ks, algo=method)
         else:
@@ -3726,7 +2990,7 @@ class Searcher:
           postings path exists."""
         terms = self.analyzer.tokenize(phrase)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         if method == "auto":
             method = (
                 "postings"
@@ -3735,54 +2999,10 @@ class Searcher:
             )
         if method == "postings":
             return self._phrase_postings(terms, k)
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "phrase search needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
-        # per query term: (doc_id, positions), term-pruned scan
-        joined = None
-        for i, t in enumerate(terms):
-            side = (
-                tv.filter(F.col("term") == t)
-                .select("doc_id", F.col("positions").alias(f"_p{i}"))
-            )
-            joined = side if joined is None else joined.join(side, "doc_id")
-        # phrase positions: p in _p0 with p+i in _pi for all i
-        # (transform lambdas must be 1-arg: 2-arg means (element, index))
-        def _shift(off: int):
-            return lambda p: p - off
-
-        first = F.col("_p0")
-        for i in range(1, len(terms)):
-            first = F.array_intersect(
-                first, F.transform(F.col(f"_p{i}"), _shift(i))
-            )
-        cand = self._not_deleted(
-            joined.select("doc_id", F.size(first).alias("tf")).filter(
-                F.col("tf") > 0
-            )
-        )
+        tv = self._term_vectors("phrase search")
         dfs = self._term_stats(terms)
         idf_sum = sum(idf(self.num_docs, dfs.get(t, 0)) for t in terms)
-        dl = self.cat.read(self.spark, "doc_lens")
-        score = (
-            F.lit(idf_sum)
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(self.avgdl))
-            )
-        )
-        return (
-            cand.join(dl, "doc_id")
-            .select("doc_id", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top(self._exact_phrase_frame(tv, terms, idf_sum), k)
 
     def _phrase_postings(self, terms: list[str], k: int) -> DataFrame:
         """Phrase scoring over position-carrying posting shards: per
@@ -3797,9 +3017,8 @@ class Searcher:
             )
         dfs = self._term_stats(terms)
         if any(t not in dfs for t in terms):
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._empty()
         idf_sum = float(sum(idf(self.num_docs, dfs[t]) for t in terms))
-        avgdl = self.avgdl or 1.0
         pp = self.cat.read(self.spark, "pos_postings").filter(
             F.col("term").isin(list(set(terms)))
         )
@@ -3875,21 +3094,8 @@ class Searcher:
         cand = pp.groupBy("shard").applyInPandas(
             run, "doc_id long, tf long, dl long"
         )
-        score = (
-            F.lit(idf_sum)
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return (
-            cand.select("doc_id", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        score = _bm25(F.lit(idf_sum), self.avgdl)
+        return _top(cand.select("doc_id", score.alias("score")), k)
 
     # ------------------------------------------------------------------ #
     def _decoded(self, postings: DataFrame) -> DataFrame:
@@ -3899,26 +3105,6 @@ class Searcher:
             "term", "doc_ids_enc", "tfs_enc", "dls_enc"
         ).mapInPandas(_decode_postings, _DECODED_SCHEMA)
         return self._not_deleted(out)
-
-    def _score_dataframe(self, postings: DataFrame, qterms: DataFrame) -> DataFrame:
-        decoded = self._decoded(postings)
-        avgdl = self.avgdl
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl or 1.0))
-            )
-        )
-        return (
-            decoded.join(qterms, "term")  # broadcast: qterms is hinted
-            .withColumn("_s", score_expr)
-            .groupBy("qid", "doc_id")
-            .agg(F.sum("_s").alias("score"))
-        )
 
     def _score_wand(
         self,
@@ -3949,7 +3135,7 @@ class Searcher:
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             out_qid, out_doc, out_score = [], [], []
             for qid, g in pdf.groupby("qid", sort=False):
-                tps = []
+                rows = []
                 for _, row in g.iterrows():
                     d = codec.decode_doc_ids(row["doc_ids_enc"])
                     tf = codec.decode_tfs(row["tfs_enc"])
@@ -3965,7 +3151,12 @@ class Searcher:
                             d, tf, dl, bm = d[live], tf[live], dl[live], []
                         if d.size == 0:
                             continue
-                    tps.append((float(row["idf"]), d, tf, dl, bm))
+                    rows.append((row["term"], (float(row["idf"]), d, tf, dl, bm)))
+                # term order, whatever order the shuffle delivered the
+                # rows in: a doc's impacts then add up exactly as in
+                # _score_sum
+                rows.sort(key=lambda r: r[0])
+                tps = [tp for _, tp in rows]
                 for doc, sc in topk_fn(tps, max_k, avgdl):
                     out_qid.append(int(qid))
                     out_doc.append(doc)
@@ -3975,7 +3166,8 @@ class Searcher:
             )
 
         joined = postings.join(qterms, "term").select(
-            "qid", "idf", "shard", "doc_ids_enc", "tfs_enc", "dls_enc", "block_max"
+            "qid", "term", "idf", "shard", "doc_ids_enc", "tfs_enc", "dls_enc",
+            "block_max",
         )
         # one WAND task per (query, doc-range shard); local top-k per task,
         # global merge is the tiny window in search_batch
@@ -4095,17 +3287,12 @@ def phrase_bm25_topk(
     ).filter(F.col("term").isin(terms))
     dfs = {r["term"]: r["cnt"] for r in dt.groupBy("term").agg(F.count("*").alias("cnt")).collect()}
     idf_sum = sum(idf(n, dfs.get(t, 0)) for t in terms)
-    score = (
-        F.lit(idf_sum)
-        * F.col("tf")
-        * F.lit(K1 + 1.0)
-        / (F.col("tf") + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        base.filter(F.col("tf") > 0)
-        .select("doc_id", F.round(score, 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    score = _bm25(F.lit(idf_sum), avgdl)
+    return _top(
+        base.filter(F.col("tf") > 0).select(
+            "doc_id", F.round(score, 6).alias("score")
+        ),
+        k,
     )
 
 
@@ -4170,10 +3357,7 @@ def bm25f_topk(
             tf = F.col(f"_m{i}")[t].cast("double")
             s_t = F.when(
                 tf.isNotNull(),
-                F.lit(w) * tf * F.lit(K1 + 1.0)
-                / (tf + F.lit(K1)
-                   * (F.lit(1.0 - B)
-                      + F.lit(B) * F.col(f"_dl{i}") / F.lit(avgdl))),
+                F.lit(w) * bm25_impact(tf, F.col(f"_dl{i}"), avgdl),
             ).otherwise(F.lit(0.0))
             f_score = s_t if f_score is None else f_score + s_t
             m_t = F.col(f"_m{i}")[t]
@@ -4303,45 +3487,21 @@ class MultiSearcher:
         ties break on that global docID ascending."""
         terms = sorted(set(self.analyzer.tokenize(query)))
         dfs = self._global_dfs(terms)
-        rows = [
-            (t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs
-        ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+        present = [t for t in terms if t in dfs]
+        if not present:
+            return self.searchers[0]._empty()
+        rows = [(t, idf(self.num_docs, dfs[t]), i) for i, t in enumerate(present)]
         qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
+            self.spark.createDataFrame(rows, "term string, idf double, pos int")
         )
-        avgdl = self.avgdl or 1.0
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
+        parts = [
+            s._decoded(s._matching_postings(present)).withColumn(
+                "doc_id", F.col("doc_id") + F.lit(dbase)
             )
-        )
-        parts = []
-        present = [r[0] for r in rows]
-        for s, dbase in zip(self.searchers, self.doc_bases):
-            decoded = s._decoded(s._matching_postings(present))
-            parts.append(
-                decoded.select(
-                    (F.col("doc_id") + F.lit(dbase)).alias("doc_id"),
-                    "term",
-                    "tf",
-                    "dl",
-                )
-            )
+            for s, dbase in zip(self.searchers, self.doc_bases)
+        ]
         un = parts[0]
         for p in parts[1:]:
             un = un.unionByName(p)
-        return (
-            un.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        scored = _with_bm25(un.join(qterms, "term"), self.avgdl)
+        return _top(_sum_scores(scored, len(rows)), k)

@@ -13,6 +13,11 @@ skipping internally. We score one (query, doc_id-shard) pair per call:
 The implementation is vectorized per block-run rather than per-doc: terms
 are merged via np.searchsorted joins on candidate docs surviving the
 block-max filter. Ties: (-score, doc_id) ordering, exactly the oracle's.
+
+``bm25_impact`` (with ``K1``/``B``) is the package's single BM25 tf
+normalisation: the engine's Spark scorers, the index builders' block-max
+metadata and these kernels all call it, so every path computes the same
+floating-point expression.
 """
 
 from __future__ import annotations
@@ -25,8 +30,93 @@ K1 = 1.2
 B = 0.75
 
 
-def bm25_impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
+def bm25_impact(tfs, dls, avgdl: float):
+    """BM25 tf saturation with length norm (Lucene 7 BM25Similarity,
+    k1=1.2 b=0.75). Works elementwise on NumPy arrays, on Python floats
+    and on Spark Columns alike — one expression, bit-identical results."""
     return tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / (avgdl or 1.0)))
+
+
+def _prepare(term_postings, avgdl):
+    """Per-term (doc_ids, idf-weighted impacts) plus block tables
+    (block_last_doc, block upper bound). A term without block metadata
+    is one block bounded by its own max impact."""
+    docs = [tp[1] for tp in term_postings]
+    impacts = [
+        idf * bm25_impact(tf, dl, avgdl) for idf, _, tf, dl, _ in term_postings
+    ]
+    blk_last, blk_ub = [], []
+    for (idf, d, _, _, bm), imp in zip(term_postings, impacts):
+        if bm:
+            last = [b["last_doc"] for b in bm]
+            blk_last.append(np.array(last, dtype=np.int64))
+            blk_ub.append(idf * np.array([b["max_impact"] for b in bm]))
+        else:
+            blk_last.append(np.array([d[-1]], dtype=np.int64))
+            blk_ub.append(np.array([imp.max()]))
+    return docs, impacts, blk_last, blk_ub
+
+
+def _span_ubs(blk_last, blk_ub, lo) -> list[float]:
+    """Per-term upper bound of any doc in the span starting after ``lo``."""
+    out = []
+    for last, ub in zip(blk_last, blk_ub):
+        j = np.searchsorted(last, lo + 1)
+        out.append(float(ub[j]) if j < last.size else 0.0)
+    return out
+
+
+def _bound(span_ub: list[float]) -> float:
+    """Sequential (term-order) sum of the span bounds: it mirrors how a
+    doc's score accumulates, so it is never an ulp below a real score."""
+    total = 0.0
+    for ub in span_ub:
+        total += ub
+    return total
+
+
+def _span_sum(docs, impacts, terms, lo, hi):
+    """(docs, scores) of the postings in (lo, hi] of ``terms`` (ascending
+    term indexes, so each doc's score accumulates in term order)."""
+    parts_d, parts_i = [], []
+    for i in terms:
+        d = docs[i]
+        s = np.searchsorted(d, lo + 1)
+        e = np.searchsorted(d, hi, side="right")
+        if s < e:
+            parts_d.append(d[s:e])
+            parts_i.append(impacts[i][s:e])
+    if not parts_d:
+        return np.zeros(0, dtype=np.int64), np.zeros(0)
+    uniq, inv = np.unique(np.concatenate(parts_d), return_inverse=True)
+    sums = np.zeros(uniq.size)
+    np.add.at(sums, inv, np.concatenate(parts_i))
+    return uniq, sums
+
+
+class _TopK:
+    """(score, -doc_id) min-heap of the best k; docs must arrive in
+    ascending doc_id order, which is what makes a span whose upper bound
+    merely EQUALS the floor safe to skip."""
+
+    def __init__(self, k: int, threshold: float):
+        self.k, self.threshold, self.heap = k, threshold, []
+
+    def floor(self) -> float:
+        return self.heap[0][0] if len(self.heap) >= self.k else self.threshold
+
+    def push(self, cand: np.ndarray, scores: np.ndarray) -> None:
+        heap = self.heap
+        for doc, sc in zip(cand.tolist(), scores.tolist()):
+            if len(heap) < self.k:
+                if sc > self.threshold:
+                    heapq.heappush(heap, (sc, -doc))
+            elif (sc, -doc) > heap[0]:
+                heapq.heapreplace(heap, (sc, -doc))
+
+    def result(self) -> list[tuple[int, float]]:
+        out = sorted(self.heap, key=lambda t: (-t[0], -t[1]))
+        return [(-nd, float(sc)) for sc, nd in out]
 
 
 def wand_topk(
@@ -44,72 +134,17 @@ def wand_topk(
     """
     if not term_postings:
         return []
-    # Upper bound if every term hit at its global max impact: quick reject.
-    # Work block-aligned: evaluate candidate docs in block-sized spans,
-    # skipping spans whose summed block max can't beat the heap floor.
-    n_terms = len(term_postings)
-    idfs = np.array([tp[0] for tp in term_postings])
-    docs = [tp[1] for tp in term_postings]
-    impacts = [
-        idfs[i] * bm25_impact(term_postings[i][2], term_postings[i][3], avgdl)
-        for i in range(n_terms)
-    ]
-    # block tables: per term, arrays (block_last_doc, block_ub)
-    blk_last, blk_ub = [], []
-    for i, tp in enumerate(term_postings):
-        bm = tp[4]
-        if bm:
-            blk_last.append(np.array([b["last_doc"] for b in bm], dtype=np.int64))
-            blk_ub.append(idfs[i] * np.array([b["max_impact"] for b in bm]))
-        else:  # no metadata: one block covering everything, max possible impact
-            blk_last.append(np.array([docs[i][-1]], dtype=np.int64))
-            blk_ub.append(np.array([idfs[i] * (K1 + 1.0)]))
-
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-
-    def floor() -> float:
-        return heap[0][0] if len(heap) >= k else threshold
-
-    # Candidate doc ranges: walk the union of block boundaries.
-    boundaries = np.unique(np.concatenate(blk_last))
+    docs, impacts, blk_last, blk_ub = _prepare(term_postings, avgdl)
+    top = _TopK(k, threshold)
+    every = range(len(docs))
+    # Work block-aligned: walk the union of block boundaries, skipping
+    # spans whose summed block max can't beat the heap floor.
     lo = -1
-    for hi in boundaries:
-        # upper bound of any doc in (lo, hi]: sum over terms of the ub of
-        # the block containing this range
-        ub = 0.0
-        for i in range(n_terms):
-            j = np.searchsorted(blk_last[i], lo + 1)
-            if j < blk_last[i].size:
-                ub += blk_ub[i][j]
-        if ub <= floor():
-            lo = hi
-            continue
-        # score this span exactly: gather postings in (lo, hi] per term,
-        # sum per doc vectorized (np.unique + add.at)
-        parts_d, parts_i = [], []
-        for i in range(n_terms):
-            d = docs[i]
-            s = np.searchsorted(d, lo + 1)
-            e = np.searchsorted(d, hi, side="right")
-            if s < e:
-                parts_d.append(d[s:e])
-                parts_i.append(impacts[i][s:e])
-        if parts_d:
-            all_d = np.concatenate(parts_d)
-            all_i = np.concatenate(parts_i)
-            uniq, inv = np.unique(all_d, return_inverse=True)
-            sums = np.zeros(uniq.size)
-            np.add.at(sums, inv, all_i)
-            for doc, sc in zip(uniq.tolist(), sums.tolist()):
-                if len(heap) < k:
-                    if sc > threshold:
-                        heapq.heappush(heap, (sc, -doc))
-                elif (sc, -doc) > heap[0]:
-                    heapq.heapreplace(heap, (sc, -doc))
+    for hi in np.unique(np.concatenate(blk_last)):
+        if _bound(_span_ubs(blk_last, blk_ub, lo)) > top.floor():
+            top.push(*_span_sum(docs, impacts, every, lo, hi))
         lo = hi
-
-    out = sorted(((sc, -nd) for sc, nd in heap), key=lambda t: (-t[0], t[1]))
-    return [(int(doc), float(sc)) for sc, doc in out]
+    return top.result()
 
 
 def maxscore_topk(
@@ -120,66 +155,37 @@ def maxscore_topk(
 ) -> list[tuple[int, float]]:
     """Block-max MaxScore (Turtle & Flood) top-k — same contract, same
     tie-break, and the same span-skip rule as wand_topk, so the two are
-    result-identical at the default ``threshold=0.0``; only the pruning
-    strategy differs. With a NONZERO entry threshold the identity holds
-    only up to summation-order ulps: MaxScore accumulates a doc's score
-    essential-terms-first then non-essential, wand/brute sum in term
-    order, so when a doc's exact score EQUALS the threshold the strict
-    ``sc > threshold`` admission can flip on a 1-2 ulp difference
-    (fuzz-confirmed). A cross-shard floor handoff that feeds another
-    shard's floor in as ``threshold`` must therefore quantize both sides
-    (e.g. round to 6 dp, the harness convention) before comparing, or
-    accept ulp-level admission skew at exact-tie scores. Within each
-    surviving span, terms are split at the current heap floor into a
-    NON-ESSENTIAL prefix (ascending span upper bounds whose running sum
-    cannot alone beat the floor — their postings are never enumerated)
-    and an ESSENTIAL tail that supplies the candidate docs; candidates
-    then take non-essential contributions via binary-search lookups with
-    a progressively tightening upper-bound filter (candidates are
-    dropped as soon as score-so-far + remaining non-essential bound
-    falls to the floor). Lucene 8+ ships exactly this pair of dynamic
-    pruning strategies (WANDScorer / MaxScoreBulkScorer); which wins
-    depends on term-count and score skew, so the engine exposes both
-    (Searcher.search method="maxscore")."""
+    result-identical. Within each surviving span, terms are split at the
+    current heap floor into a NON-ESSENTIAL prefix (ascending span upper
+    bounds whose running sum cannot alone beat the floor — their postings
+    are never enumerated) and an ESSENTIAL tail that supplies the
+    candidate docs; candidates then take non-essential contributions via
+    binary-search lookups with a progressively tightening upper-bound
+    filter (candidates are dropped as soon as score-so-far + remaining
+    non-essential bound falls below the floor). Survivors are re-summed
+    in term order, so admitted scores are bit-identical to wand_topk's;
+    only the pruning decisions use the essential-first partial sums,
+    which can differ by an ulp — a doc whose exact score EQUALS a
+    nonzero entry ``threshold`` may therefore be admitted by one kernel
+    and not the other (fuzz-confirmed), so a cross-shard floor handoff
+    must quantize both sides (e.g. round to 6 dp) before comparing.
+    Lucene 8+ ships exactly this pair of dynamic pruning strategies
+    (WANDScorer / MaxScoreBulkScorer); which wins depends on term-count
+    and score skew, so the engine exposes both (Searcher.search
+    method="maxscore")."""
     if not term_postings:
         return []
-    n_terms = len(term_postings)
-    idfs = np.array([tp[0] for tp in term_postings])
-    docs = [tp[1] for tp in term_postings]
-    impacts = [
-        idfs[i] * bm25_impact(term_postings[i][2], term_postings[i][3], avgdl)
-        for i in range(n_terms)
-    ]
-    blk_last, blk_ub = [], []
-    for i, tp in enumerate(term_postings):
-        bm = tp[4]
-        if bm:
-            blk_last.append(
-                np.array([b["last_doc"] for b in bm], dtype=np.int64)
-            )
-            blk_ub.append(idfs[i] * np.array([b["max_impact"] for b in bm]))
-        else:
-            blk_last.append(np.array([docs[i][-1]], dtype=np.int64))
-            blk_ub.append(np.array([idfs[i] * (K1 + 1.0)]))
-
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-
-    def floor() -> float:
-        return heap[0][0] if len(heap) >= k else threshold
-
-    boundaries = np.unique(np.concatenate(blk_last))
+    docs, impacts, blk_last, blk_ub = _prepare(term_postings, avgdl)
+    top = _TopK(k, threshold)
+    every = range(len(docs))
     lo = -1
-    for hi in boundaries:
-        # per-term upper bound inside (lo, hi]
-        span_ub = np.zeros(n_terms)
-        for i in range(n_terms):
-            j = np.searchsorted(blk_last[i], lo + 1)
-            if j < blk_last[i].size:
-                span_ub[i] = blk_ub[i][j]
-        th = floor()
-        if span_ub.sum() <= th:
+    for hi in np.unique(np.concatenate(blk_last)):
+        span_ub = _span_ubs(blk_last, blk_ub, lo)
+        th = top.floor()
+        if _bound(span_ub) <= th:
             lo = hi
             continue
+        span_ub = np.array(span_ub)
         # MaxScore split: ascending-UB prefix whose cumulative bound
         # stays STRICTLY below the floor is non-essential — a doc
         # matching only those terms scores < floor, and the heap's
@@ -189,48 +195,33 @@ def maxscore_topk(
         order = np.argsort(span_ub, kind="stable")
         cum = np.cumsum(span_ub[order])
         n_noness = int(np.searchsorted(cum, th, side="left"))
-        ess = order[n_noness:]
-        noness = order[:n_noness]
-        # candidates: docs appearing in any essential list in the span
-        parts_d, parts_i = [], []
-        for i in ess:
-            d = docs[i]
-            s = np.searchsorted(d, lo + 1)
-            e = np.searchsorted(d, hi, side="right")
-            if s < e:
-                parts_d.append(d[s:e])
-                parts_i.append(impacts[i][s:e])
-        if parts_d:
-            all_d = np.concatenate(parts_d)
-            all_i = np.concatenate(parts_i)
-            cand, inv = np.unique(all_d, return_inverse=True)
-            score = np.zeros(cand.size)
-            np.add.at(score, inv, all_i)
+        cand, score = _span_sum(
+            docs, impacts, np.sort(order[n_noness:]), lo, hi
+        )
+        if n_noness and cand.size:
             # progressive non-essential lookups, largest bound first:
-            # remaining[j] = UB still addable after taking term noness[j]
-            if noness.size:
-                desc = noness[::-1]
-                taken = np.cumsum(span_ub[desc])
-                remaining = taken[-1] - taken  # UB still addable after j
-                alive = score + (cum[n_noness - 1] if n_noness else 0.0) >= th
+            # remaining[j] = UB still addable after taking term desc[j]
+            desc = order[:n_noness][::-1]
+            taken = np.cumsum(span_ub[desc])
+            remaining = taken[-1] - taken
+            alive = score + cum[n_noness - 1] >= th
+            cand, score = cand[alive], score[alive]
+            for j, i in enumerate(desc):
+                if cand.size == 0:
+                    break
+                score = score + _lookup(docs[i], impacts[i], cand)
+                alive = score + remaining[j] >= th
                 cand, score = cand[alive], score[alive]
-                for j, i in enumerate(desc):
-                    if cand.size == 0:
-                        break
-                    d = docs[i]
-                    pos = np.searchsorted(d, cand)
-                    pos_c = np.minimum(pos, d.size - 1)
-                    hit = d[pos_c] == cand
-                    score = score + np.where(hit, impacts[i][pos_c], 0.0)
-                    alive = score + remaining[j] >= th
-                    cand, score = cand[alive], score[alive]
-            for doc, sc in zip(cand.tolist(), score.tolist()):
-                if len(heap) < k:
-                    if sc > threshold:
-                        heapq.heappush(heap, (sc, -doc))
-                elif (sc, -doc) > heap[0]:
-                    heapq.heapreplace(heap, (sc, -doc))
+            if cand.size:  # re-sum survivors in term order
+                score = np.zeros(cand.size)
+                for i in every:
+                    score = score + _lookup(docs[i], impacts[i], cand)
+        top.push(cand, score)
         lo = hi
+    return top.result()
 
-    out = sorted(((sc, -nd) for sc, nd in heap), key=lambda t: (-t[0], t[1]))
-    return [(int(doc), float(sc)) for sc, doc in out]
+
+def _lookup(d: np.ndarray, impacts: np.ndarray, cand: np.ndarray) -> np.ndarray:
+    """Each candidate's impact in one term's list (0.0 where absent)."""
+    pos = np.minimum(np.searchsorted(d, cand), d.size - 1)
+    return np.where(d[pos] == cand, impacts[pos], 0.0)

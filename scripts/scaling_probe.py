@@ -29,6 +29,8 @@ import bench  # noqa: E402
 
 
 def probe_pair(base: int, wide: int) -> tuple[float, float]:
+    """Raw wall seconds of the probe at each width (the wide leg runs
+    wide/base times the base leg's rows)."""
     # one SparkContext per JVM: the session MUST be stopped before the
     # next width can really exist (getOrCreate() silently reuses the
     # running session otherwise — see bench._scaling_leg)
@@ -43,8 +45,7 @@ def probe_pair(base: int, wide: int) -> tuple[float, float]:
         # meaningless (the round-5 first attempt gated out 4->16 on a
         # 0.62 s wide leg). Per-core work keeps each leg multi-second,
         # and the reported ratio is corrected for the size difference.
-        t = bench.host_probe(s, rows=500_000_000 * cores)
-        out.append(t / cores)  # normalize to per-fixed-work seconds
+        out.append(bench.host_probe(s, rows=500_000_000 * cores))
         s.stop()
     return out[0], out[1]
 
@@ -65,10 +66,14 @@ def main() -> None:
     ]
     for attempt in range(args.attempts):
         for base, wide, turns in pairs:
-            pb, pw = probe_pair(base, wide)
+            wall_b, wall_w = probe_pair(base, wide)
+            # per-core normalized: seconds per fixed amount of work
+            pb, pw = wall_b / base, wall_w / wide
             speedup = pb / pw if pw else 0.0
             line = {
                 "pair": f"{base}->{wide}",
+                "probe_base_wall_sec": round(wall_b, 2),
+                "probe_wide_wall_sec": round(wall_w, 2),
                 "probe_base_sec": round(pb, 2),
                 "probe_wide_sec": round(pw, 2),
                 "probe_speedup": round(speedup, 2),

@@ -120,6 +120,18 @@ def test_validation_rejects_bad_entries():
         ).reading_map()
 
 
+def test_userdict_line_with_apostrophe_rejected():
+    """Surfaces and segments end up inside SQL string literals of the
+    DuckDB Viterbi twin, so a single quote is refused at parse time."""
+    from nlp4l_spark.analysis.jadict import builtin_analyzer
+
+    for line in ("関西',関西'", "関西国際,関西 国際'"):
+        with pytest.raises(ValueError, match="single quote"):
+            JaUserDictEntry.parse(line)
+    with pytest.raises(ValueError, match="single quote"):
+        builtin_analyzer(user_csv_lines=("東京',東京',トウキョウ,カスタム名詞",))
+
+
 def test_csv_parse_roundtrip():
     e = JaUserDictEntry.parse(
         "関西国際空港,関西 国際 空港,カンサイ コクサイ クウコウ,カスタム名詞"

@@ -69,13 +69,8 @@ def test_maxscore_equals_wand_and_brute(seed, n_docs, n_terms, density, k, skew)
     brute = _brute_topk(tps, k, avgdl)
     wand = wand_topk(tps, k, avgdl)
     ms = maxscore_topk(tps, k, avgdl)
-    assert [d for d, _ in ms] == [d for d, _ in wand] == [d for d, _ in brute]
-    for (_, a), (_, b) in zip(ms, brute):
-        assert abs(a - b) < 1e-9
-    for (_, a), (_, b) in zip(ms, wand):
-        # summation order differs (essential-first vs all-at-once), so
-        # scores agree to float accumulation noise, not bitwise
-        assert abs(a - b) < 1e-9
+    # every path sums a doc's impacts in term order: bit-identical
+    assert ms == wand == brute
 
 
 @pytest.mark.parametrize("seed", [7, 8])
@@ -96,7 +91,8 @@ def test_maxscore_shard_threshold(seed):
 
 
 def test_maxscore_no_block_metadata():
-    """Missing block_max falls back to the (K1+1)-bound whole-list block."""
+    """Missing block_max falls back to one whole-list block bounded by
+    the list's own max impact."""
     docs = np.array([3, 9, 40], dtype=np.int64)
     tfs = np.array([2, 1, 5], dtype=np.int64)
     dls = np.array([10, 20, 30], dtype=np.int64)
@@ -109,8 +105,10 @@ def test_maxscore_empty():
 
 
 def test_searcher_method_maxscore(spark, tmp_path):
-    """End-to-end: Searcher(method='maxscore') is row-identical to wand
-    and dataframe on a multi-shard synthetic index, over the bench query
+    """End-to-end: the three search methods return identical
+    (qid, rank, doc_id, score) rows — scores compared with ``==``, since
+    every path computes idf · bm25_impact and sums a doc's terms in the
+    same order — on a multi-shard synthetic index, over the bench query
     shapes (head/rare/OR/needle/stopword-only/unknown)."""
     from nlp4l_spark.data.transcripts import synth_queries, synth_transcripts
     from nlp4l_spark.index import build_index
@@ -119,14 +117,23 @@ def test_searcher_method_maxscore(spark, tmp_path):
     path = str(tmp_path / "ms_idx")
     build_index(synth_transcripts(spark, 4000, num_partitions=8), path)
     s = Searcher(spark, path)
-    qset = synth_queries(8)
-    ms = s.search_batch(qset, method="maxscore").collect()
-    wd = s.search_batch(qset, method="wand").collect()
-    assert [(r["qid"], r["rank"], r["doc_id"]) for r in ms] == [
-        (r["qid"], r["rank"], r["doc_id"]) for r in wd
+    # plus a 5-head-term OR: docs matching 3+ terms, where the order a
+    # doc's contributions are added in decides the last bit
+    qset = synth_queries(8) + [(100, "w00001 w00002 w00003 w00004 w00005", 10)]
+
+    def rows(df):
+        return [
+            (r["qid"], r["rank"], r["doc_id"], r["score"])
+            for r in df.orderBy("qid", "rank").collect()
+        ]
+
+    wd = rows(s.search_batch(qset, method="wand"))
+    assert wd
+    assert rows(s.search_batch(qset, method="maxscore")) == wd
+    assert rows(s.search_batch(qset, method="dataframe")) == wd
+    q = "w00001 w00454 needle03"
+    one = s.search(q, k=5, method="maxscore").collect()
+    two = s.search(q, k=5, method="dataframe").collect()
+    assert [(r["doc_id"], r["score"]) for r in one] == [
+        (r["doc_id"], r["score"]) for r in two
     ]
-    assert all(abs(a["score"] - b["score"]) < 1e-9 for a, b in zip(ms, wd))
-    one = s.search("w00001 w00454 needle03", k=5, method="maxscore").collect()
-    two = s.search("w00001 w00454 needle03", k=5, method="dataframe").collect()
-    assert [r["doc_id"] for r in one] == [r["doc_id"] for r in two]
-    assert all(abs(a["score"] - b["score"]) < 1e-9 for a, b in zip(one, two))

@@ -148,6 +148,41 @@ def test_search_tiered(spark, pruned_idx):
     )
 
 
+def test_search_tiered_rounded_tie_straddles_window(spark, tmp_path):
+    """The window cut is (round(score, 6) DESC, doc_id ASC) over the WHOLE
+    tier: doc 1 outscores doc 0 only past the 6th decimal, so the single
+    window slot goes to doc 0 — which the first fetch (top-`window` by
+    exact score) alone never sees."""
+    rows = [
+        ("c0", 0, "user", " ".join(["kiwi"] * 2000), None, None),
+        ("c0", 1, "user", " ".join(["kiwi"] * 2001), None, None),
+    ] + [("c1", i, "user", "plum", None, None) for i in range(8)]
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp"
+    )
+    path = str(tmp_path / "tie_idx")
+    build_index(spark.createDataFrame(rows, schema), path)
+    s = Searcher(spark, path)
+    exact = {
+        r["doc_id"]: r["score"]
+        for r in s.search("kiwi", k=10, method="dataframe").collect()
+    }
+    assert exact[1] > exact[0] and round(exact[1], 6) == round(exact[0], 6)
+    got = s.search_tiered("kiwi", k=1, window=1, tier_table="postings")
+    assert [(r["doc_id"], r["score"], r["rank"]) for r in got.collect()] == [
+        (0, exact[0], 1)
+    ]
+
+
+def test_round6_is_half_up():
+    from nlp4l_spark.search.engine import _round6
+
+    assert _round6(0.0000005) == 0.000001  # round() gives 0.0
+    assert _round6(2.0000025) == 2.000003  # round() gives 2.000002
+    assert _round6(1.2345674) == 1.234567
+
+
 def test_search_tiered_oov_term(spark, pruned_idx):
     """A mixed query (indexed terms + a term absent from the corpus)
     must not KeyError in the exact-rescore phase (_term_stats omits
