@@ -42,7 +42,7 @@ from nlp4l_spark.index import codec
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search import wand as wand_mod
 # K1 and B are re-exported: wand.py holds the one BM25 definition
-from nlp4l_spark.search.wand import B, K1, bm25_impact  # noqa: F401
+from nlp4l_spark.search.wand import B, K1, bm25_impact, bm25l_score  # noqa: F401
 
 _SCORED = "doc_id long, score double"
 _RANKED = "doc_id long, score double, rank int"
@@ -76,23 +76,26 @@ def _with_bm25(joined: DataFrame, avgdl: float) -> DataFrame:
     return joined.withColumn("_s", _bm25(F.col("idf"), avgdl))
 
 
-def _score_sum(n: int) -> Column:
-    """Aggregate: a group's ``_s`` contributions added in term order —
-    ``pos`` (< n) is a row's index among its query's sorted terms, and a
-    doc has at most one row per term — starting from 0.0: the order
-    wand_topk, maxscore_topk and explain() add in, so every path gives a
-    doc the same bits. A plain SUM adds 3+ terms in whatever order the
-    shuffle delivers rows."""
+def _sum_scores(scored: DataFrame) -> DataFrame:
+    """Per-doc score: the plain SUM of ``_s`` (addition order follows
+    the shuffle, so 3+-term docs may differ from a kernel by an ulp)."""
+    return scored.groupBy("doc_id").agg(F.sum("_s").alias("score"))
+
+
+def _term_order_sum(scored: DataFrame, n: int, *by: str) -> DataFrame:
+    """Per-doc (or per ``by`` key) score: the ``_s`` contributions added
+    in term order — ``pos`` (< n) is a row's index among its query's
+    sorted terms, and a doc has at most one row per term — starting from
+    0.0. That is the order wand_topk and maxscore_topk add in, so a
+    frame summed this way matches their bits. It costs one conditional
+    SUM per query term, so only the paths that must equal a kernel use
+    it (search_batch's dataframe method, search_tiered's rescoring,
+    MultiSearcher.search)."""
     total = F.lit(0.0)
     for i in range(n):
         part = F.sum(F.when(F.col("pos") == i, F.col("_s")))
         total = total + F.coalesce(part, F.lit(0.0))
-    return total
-
-
-def _sum_scores(scored: DataFrame, n: int, *by: str) -> DataFrame:
-    """Per-doc (or per ``by`` key) score: the term-order sum of ``_s``."""
-    return scored.groupBy(*(by or ("doc_id",))).agg(_score_sum(n).alias("score"))
+    return scored.groupBy(*(by or ("doc_id",))).agg(total.alias("score"))
 
 
 def _top(frame: DataFrame, k: int) -> DataFrame:
@@ -344,7 +347,7 @@ class Searcher:
     def _weighted_or_frame(self, rows: list[tuple]) -> DataFrame | None:
         """(term, idf*boost) rows -> unlimited (doc_id, score) OR frame."""
         scored = self._scored(rows)
-        return None if scored is None else _sum_scores(scored, len(rows))
+        return None if scored is None else _sum_scores(scored)
 
     def _sum_topk(
         self, rows: list[tuple], weight: str, expr: Column, k: int
@@ -354,7 +357,7 @@ class Searcher:
         j = self._joined(rows, weight)
         if j is None:
             return self._empty()
-        return _top(_sum_scores(j.withColumn("_s", expr), len(rows)), k)
+        return _top(_sum_scores(j.withColumn("_s", expr)), k)
 
     def _docs(self, postings: DataFrame) -> DataFrame:
         """Distinct live doc ids of a postings frame."""
@@ -678,7 +681,7 @@ class Searcher:
                 " n_child long, best_child long"
             )
         child = scored.groupBy("doc_id").agg(
-            F.round(_score_sum(len(rows)), 6).alias("s")
+            F.round(F.sum("_s"), 6).alias("s")
         )
         if parent_col is not None:
             stored = self.cat.read(self.spark, "stored").select(
@@ -916,7 +919,7 @@ class Searcher:
             return F.sum(F.when(F.col("term").isin(terms), 1).otherwise(0))
 
         scored = scored.groupBy("doc_id").agg(
-            _score_sum(len(rows)).alias("score"),
+            F.sum("_s").alias("score"),
             n_matched(must_present).alias("_nm"),
             n_matched(should_present).alias("_nsm"),
         )
@@ -1870,9 +1873,7 @@ class Searcher:
                 bm25_impact(tf, F.col("dl"), self.avgdl) + F.lit(d)
             )
         else:
-            norm = 1.0 - B + B * F.col("dl").cast("double") / (self.avgdl or 1.0)
-            # BM25's saturation of the shifted c' + δ at unit norm (dl = avgdl)
-            s = F.col("idf") * bm25_impact(tf / norm + F.lit(d), 1.0, 1.0)
+            s = bm25l_score(F.col("idf"), tf, F.col("dl"), self.avgdl, d)
         return self._sum_topk(self._weights(self._terms(query)), "idf", s, k)
 
     def significant_text(self, query: str, k: int = 15) -> DataFrame:
@@ -2486,6 +2487,8 @@ class Searcher:
         the first pass reads ~|q|·P postings instead of the full lists
         and the exact pass is window-bounded — query cost is corpus-size
         independent end to end."""
+        if window < 1:
+            return self._empty(_RANKED)
         tier = Searcher(
             self.spark,
             self.cat.root,
@@ -2510,7 +2513,7 @@ class Searcher:
                 ((_round6(r["score"]), r["doc_id"]) for r in fetched),
                 key=lambda t: (-t[0], t[1]),
             )
-            if len(fetched) < k2 or len(ranked) <= window:
+            if len(fetched) < k2:
                 break  # tier exhausted — the fetch IS the whole matchset
             boundary = ranked[window - 1][0]
             if _round6(min(r["score"] for r in fetched)) < boundary:
@@ -2524,7 +2527,7 @@ class Searcher:
         scored = self._scored(rows).filter(
             F.col("doc_id").isin(cand)  # window-sized
         )
-        return _ranked(_top(_sum_scores(scored, len(rows)), k))
+        return _ranked(_top(_term_order_sum(scored, len(rows)), k))
 
     def search_after(
         self,
@@ -2929,7 +2932,7 @@ class Searcher:
         all_terms = sorted({t for ts in per_q_terms.values() for t in ts})
         dfs = self._term_stats(all_terms)
         # (qid, term, idf, pos) — only terms that exist in the index;
-        # pos orders a query's terms for _score_sum
+        # pos orders a query's terms for _term_order_sum
         rows = []
         for qid, ts in per_q_terms.items():
             present = [t for t in ts if t in dfs]
@@ -2948,7 +2951,7 @@ class Searcher:
         if method == "dataframe":
             joined = self._decoded(postings).join(qterms, "term")
             n = 1 + max(r[3] for r in rows)
-            scored = _sum_scores(
+            scored = _term_order_sum(
                 _with_bm25(joined, self.avgdl), n, "qid", "doc_id"
             )
         elif method in ("wand", "maxscore"):
@@ -3154,7 +3157,7 @@ class Searcher:
                     rows.append((row["term"], (float(row["idf"]), d, tf, dl, bm)))
                 # term order, whatever order the shuffle delivered the
                 # rows in: a doc's impacts then add up exactly as in
-                # _score_sum
+                # _term_order_sum
                 rows.sort(key=lambda r: r[0])
                 tps = [tp for _, tp in rows]
                 for doc, sc in topk_fn(tps, max_k, avgdl):
@@ -3504,4 +3507,4 @@ class MultiSearcher:
         for p in parts[1:]:
             un = un.unionByName(p)
         scored = _with_bm25(un.join(qterms, "term"), self.avgdl)
-        return _top(_sum_scores(scored, len(rows)), k)
+        return _top(_term_order_sum(scored, len(rows)), k)

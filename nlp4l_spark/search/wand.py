@@ -30,11 +30,24 @@ K1 = 1.2
 B = 0.75
 
 
+def bm25_norm(dls, avgdl: float):
+    """BM25 document-length norm 1 - b + b·dl/avgdl."""
+    return 1.0 - B + B * dls / (avgdl or 1.0)
+
+
 def bm25_impact(tfs, dls, avgdl: float):
     """BM25 tf saturation with length norm (Lucene 7 BM25Similarity,
     k1=1.2 b=0.75). Works elementwise on NumPy arrays, on Python floats
     and on Spark Columns alike — one expression, bit-identical results."""
-    return tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / (avgdl or 1.0)))
+    return tfs * (K1 + 1.0) / (tfs + K1 * bm25_norm(dls, avgdl))
+
+
+def bm25l_score(weight, tfs, dls, avgdl: float, delta: float):
+    """BM25L (Lv & Zhai, CIKM 2011): weight·(k1+1)(c'+δ)/(k1+c'+δ) with
+    c' = tf/norm — its own saturation of the length-normalised tf, not
+    BM25's. Evaluated left to right as written."""
+    cp = tfs / bm25_norm(dls, avgdl)
+    return weight * (K1 + 1.0) * (cp + delta) / (K1 + cp + delta)
 
 
 def _prepare(term_postings, avgdl):

@@ -173,6 +173,8 @@ def test_search_tiered_rounded_tie_straddles_window(spark, tmp_path):
     assert [(r["doc_id"], r["score"], r["rank"]) for r in got.collect()] == [
         (0, exact[0], 1)
     ]
+    # an empty window selects nothing
+    assert s.search_tiered("kiwi", k=1, window=0, tier_table="postings").count() == 0
 
 
 def test_round6_is_half_up():
